@@ -34,10 +34,11 @@ object GzipCodec {
     * the raw DEFLATE body is ~30 lines each way, so the codec is
     * hand-rolled over `reset()`-reused zlib handles. Framing semantics
     * mirror java.util.zip.GZIPInput/OutputStream exactly: same header
-    * bytes on compress (all-zero FLG/MTIME/XFL/OS — byte-identical
-    * output, locked by GzipSpec), full FEXTRA/FNAME/FCOMMENT/FHCRC
-    * handling, CRC32+ISIZE verification, concatenated-member support,
-    * and silently-ignored trailing garbage on decompress. */
+    * bytes on compress (FLG/MTIME/XFL zero and OS = 0xff "unknown" —
+    * byte-identical output, locked by GzipSpec), full
+    * FEXTRA/FNAME/FCOMMENT/FHCRC handling, CRC32+ISIZE verification,
+    * concatenated-member support, and silently-ignored trailing garbage
+    * on decompress. */
   private val inflaters = new ThreadLocal[Inflater] {
     override def initialValue(): Inflater = new Inflater(true) // nowrap: raw deflate
   }
@@ -83,9 +84,28 @@ object GzipCodec {
     p
   }
 
+  /** Largest array length the JVM reliably allocates (the JDK's own
+    * soft maximum, ArraysSupport.SOFT_MAX_ARRAY_LENGTH). */
+  private[graft] val maxArrayLength: Int = Int.MaxValue - 8
+
+  /** A buffer length of `wanted` bytes, at least 64, clamped to the
+    * inflation cap and the JVM array limit. Long arithmetic: past
+    * ~512 MB of input, 4× input and doubled buffers exceed Int, and a
+    * wrapped negative length would throw NegativeArraySizeException —
+    * which escapes try_gunzip and fails the task instead of
+    * dead-lettering the record. */
+  private def clampedLength(wanted: Long, cap: Long): Int =
+    math.min(math.max(wanted, 64L), math.min(cap, maxArrayLength.toLong)).toInt
+
+  /** The output buffer's next length once `current` bytes are full:
+    * double it, within `cap` and the array limit. A result equal to
+    * `current` means the buffer cannot grow. */
+  private[graft] def grownLength(current: Int, cap: Long): Int =
+    clampedLength(current.toLong * 2L, cap)
+
   def gunzip(bytes: Array[Byte]): Array[Byte] = {
     val cap = math.max(maxInflateBytes, 4L * bytes.length)
-    var out = new Array[Byte](math.max(64, math.min(cap, bytes.length.toLong * 4L).toInt))
+    var out = new Array[Byte](clampedLength(4L * bytes.length, cap))
     var outLen = 0
     val inf = inflaters.get()
     val crc = crcs.get()
@@ -99,10 +119,11 @@ object GzipCodec {
       val memberStart = outLen
       while (!inf.finished()) {
         if (outLen == out.length) {
-          if (outLen.toLong >= cap)
+          val next = grownLength(outLen, cap)
+          if (next <= outLen)
             throw new java.io.IOException(
-              s"gunzip output exceeds inflation cap ($cap bytes for ${bytes.length} compressed)")
-          out = java.util.Arrays.copyOf(out, math.min(cap, math.max(out.length.toLong * 2L, 64L)).toInt)
+              s"gunzip output exceeds inflation cap ($next bytes for ${bytes.length} compressed)")
+          out = java.util.Arrays.copyOf(out, next)
         }
         val n = try inf.inflate(out, outLen, out.length - outLen)
         catch { case e: java.util.zip.DataFormatException =>

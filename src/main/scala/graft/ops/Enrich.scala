@@ -1498,7 +1498,7 @@ object Enrich {
   /** The COMPOSED ingest pipeline (one-pipeline-to-rule-them-all routing
     * + the full axway-ingest chain P0–P13) as one verifiable batch
     * query: the same `IngestPipeline.enrich` the streaming service path
-    * runs (Serve/runHttp), driven over a flattened-documents frame
+    * runs (Serve → Pipeline.run), driven over a flattened-documents frame
     * synthesized from the access log — axway docs carry the access line
     * as `{"text": ...}` (jsonOrText's wrap) plus the ssl/destination
     * metadata the P3/P13 processors read; non-axway docs pass through

@@ -3,7 +3,7 @@ package graft.streaming
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, ThreadFactory}
 import java.util.concurrent.atomic.AtomicLong
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -36,9 +36,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * Where the Go service splits/indexes records inline in the handler,
   * this front-end does the Spark-correct thing: the handler only lands
   * the batch — one JSON-lines file per request, atomically moved into
-  * the `fileDropSource` drop directory — and the streaming pipeline
-  * (decode → route → SUCCESS/ERROR channels or HTTP `_bulk` sink) does
-  * ALL data work distributed. The HTTP thread never parses payloads or
+  * the `SourceConfig.fileDrop` spool directory — and the streaming
+  * pipeline (`Pipeline.run`: decode → route → SUCCESS/ERROR channels,
+  * plus the HTTP `_bulk` sink when a target is set) does ALL data work
+  * distributed. The HTTP thread never parses payloads or
   * touches executors, so ingest rate is decoupled from processing rate
   * — the topology that survives 1000 executors, where the reference's
   * in-handler processing is bounded by one service instance.
@@ -51,6 +52,31 @@ object FirehoseEndpoint {
     * header-read time, main.go:370 — a service front-end must bound
     * body bytes too). */
   val defaultMaxBodyBytes: Int = 8 * 1024 * 1024
+
+  /** Handler threads are named `<threadPrefix><n>`. */
+  private[graft] val threadPrefix = "firehose-endpoint-"
+
+  private val threadSeq = new AtomicLong(0L)
+
+  /** The Firehose HTTP response contract (reference main.go:358–363,
+    * structs at main.go:58–69): 200 echoes the REQUEST's id and
+    * timestamp; an error response carries the same pair plus
+    * `errorMessage`. */
+  def firehoseResponse(requestId: String, timestampMs: Long,
+                       errorMessage: Option[String] = None): String = {
+    def js(s: String): String =
+      "\"" + s.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+    val base = s""""requestId":${js(requestId)},"timestamp":$timestampMs"""
+    errorMessage match {
+      case Some(m) => s"""{$base,"errorMessage":${js(m)}}"""
+      case None => s"""{$base}"""
+    }
+  }
 }
 
 final class FirehoseEndpoint(dropDir: String, port: Int = 0,
@@ -70,16 +96,22 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
   // The spool holds each record's access_key (transport credential) in
   // plaintext until the stream consumes the file, so the drop dir is
   // owner-only (0700; staged files land 0600 below). Retention is
-  // bounded by the source's cleanSource=delete option (fileDropSource
-  // sets it) — without it consumed spool files, credential included,
-  // would sit on disk indefinitely.
+  // bounded by the source's cleanSource=delete option (Serve sets it on
+  // SourceConfig.fileDrop) — without it consumed spool files, credential
+  // included, would sit on disk indefinitely.
   Files.createDirectories(Paths.get(dropDir))
   try Files.setPosixFilePermissions(Paths.get(dropDir),
     java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
   catch { case _: UnsupportedOperationException => () } // non-POSIX FS
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(Executors.newFixedThreadPool(4))
+  // owned here so stop() can shut it down: its threads are non-daemon,
+  // and a pool left running keeps the JVM (a drained Serve) alive
+  private val pool = Executors.newFixedThreadPool(4, new ThreadFactory {
+    def newThread(r: Runnable): Thread =
+      new Thread(r, FirehoseEndpoint.threadPrefix + FirehoseEndpoint.threadSeq.incrementAndGet())
+  })
+  server.setExecutor(pool)
 
   server.createContext("/ping", (ex: HttpExchange) =>
     if (ex.getRequestMethod == "GET") respond(ex, 200, """{"message":"pong"}""")
@@ -113,7 +145,7 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
 
   def boundPort: Int = server.getAddress.getPort
   def url: String = s"http://127.0.0.1:$boundPort"
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   private def respond(ex: HttpExchange, status: Int, body: String,
                       contentType: String = "application/json; charset=utf-8"): Unit = {
@@ -131,7 +163,7 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
   /** firehoseErrorBody (main.go:64–69): header-derived request id +
     * server time + errorMessage. */
   private def errorBody(requestId: String, msg: String): String =
-    Pipeline.firehoseResponse(requestId, System.currentTimeMillis(), Some(msg))
+    FirehoseEndpoint.firehoseResponse(requestId, System.currentTimeMillis(), Some(msg))
 
   private def header(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestHeaders.getFirst(name)).filter(_.nonEmpty)
@@ -226,7 +258,7 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
     val envTimestamp = root.path("timestamp").asLong(0L)
 
     // Hand the batch to the stream: one JSON-lines file per request in
-    // the fileDropSource contract (event_id, batch_ms, data, request_id),
+    // the SourceConfig contract (event_id, batch_ms, data, request_id),
     // staged hidden (file sources ignore dot-files) then atomically
     // renamed so the source never lists a half-written file.
     if (records.isArray && records.size() > 0) {
@@ -262,6 +294,6 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
     }
 
     // 200 echoes the BODY's requestId/timestamp (main.go:358–363)
-    respond(ex, 200, Pipeline.firehoseResponse(envRequestId, envTimestamp))
+    respond(ex, 200, FirehoseEndpoint.firehoseResponse(envRequestId, envTimestamp))
   }
 }

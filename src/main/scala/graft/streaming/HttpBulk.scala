@@ -12,20 +12,23 @@ import org.apache.spark.sql.DataFrame
   * OnSuccess/OnFailure callbacks).
   *
   * Spark-first shape: the documents frame renders to `_bulk` NDJSON
-  * action/source pairs (Pipeline.toBulkNdjson), and each PARTITION posts
-  * its lines in flushBytes-bounded chunks under the shared
-  * retry/backoff envelope — partitions are the reference's worker
+  * action/source pairs (Pipeline.toBulkNdjsonKeyed), and each PARTITION
+  * posts its lines in flushBytes-bounded chunks, each chunk under the
+  * retry/backoff envelope below — partitions are the reference's worker
   * goroutines, chunking is its flushBytes threshold, and Spark task
-  * retries layer on top for node loss. Per-item failures from the bulk
-  * response (the OnFailure callback, main.go:566–571) come back as rows
-  * and land idempotently under `errDir/batch=<id>` so replays overwrite
-  * rather than duplicate. Nothing collects to the driver; each executor
-  * talks to the endpoint directly, which is the only transport topology
-  * that scales to 1000 executors.
+  * retries layer on top for node loss. This module owns the retry
+  * policy: it is the only layer that sees a transient status. Per-item
+  * failures from the bulk response (the OnFailure callback,
+  * main.go:566–571) come back as rows and land idempotently under
+  * `errDir/batch=<id>` so replays overwrite rather than duplicate.
+  * Nothing collects to the driver; each executor talks to the endpoint
+  * directly, which is the only transport topology that scales to 1000
+  * executors.
   *
   * Auth passthrough (reference main.go:321–324, 414: the
-  * X-Amz-Firehose-Access-Key header becomes ES Basic auth) is the
-  * optional `auth` header value, stamped on every request.
+  * X-Amz-Firehose-Access-Key header becomes ES Basic auth) is per
+  * record: each body posts under its records' own key, and keyless
+  * records fall back to the optional static `auth` header value.
   */
 object HttpBulk {
 
@@ -33,6 +36,53 @@ object HttpBulk {
     * NDJSON, so executor memory per flush is bounded regardless of
     * partition size. */
   val defaultFlushBytes: Int = 5000000
+
+  /** Where a stream's documents POST — a deployment setting: the
+    * `_bulk` URL, the target index, and the ingest pipeline the
+    * reference binds on every bulk request (main.go:437 stamps
+    * `pipeline=<name>` — wire parity for an ES-side pipeline, while the
+    * stream's `enrich` runs the same chain in-engine). `flushBytes` and
+    * `backoffMs` are the transport's tuning knobs (the reference's
+    * flushBytes at main.go:46 and backoff at main.go:400–412). */
+  final case class Target(url: String, index: String,
+                          pipeline: Option[String] = None,
+                          flushBytes: Int = defaultFlushBytes,
+                          backoffMs: Long = 50) {
+    /** `url` with the `pipeline=` query param, when one is bound. */
+    def postUrl: String = pipeline.fold(url)(p =>
+      url + (if (url.contains("?")) "&" else "?") + "pipeline=" + p)
+  }
+
+  /** Transient sink failure carrying the HTTP status. */
+  final case class TransientSinkError(status: Int)
+      extends RuntimeException(s"transient sink error: HTTP $status")
+
+  /** Statuses worth retrying (reference main.go:412 RetryOnStatus). */
+  val retryOnStatus: Set[Int] = Set(429, 502, 503, 504)
+
+  /** Exponential-backoff retry envelope around one POST (reference
+    * main.go:400–412 wraps every bulk flush in
+    * backoff.NewExponentialBackOff). Non-transient errors and exhausted
+    * attempts propagate: the task fails, its job fails, and under
+    * checkpointed `foreachBatch` the micro-batch re-runs on restart —
+    * the reference's whole-batch Firehose retry, re-expressed. */
+  def withRetry[A](maxAttempts: Int = 5, baseBackoffMs: Long = 50,
+                   sleep: Long => Unit = Thread.sleep)(f: => A): A = {
+    var attempt = 1
+    var delayMs = baseBackoffMs
+    var result: Option[A] = None
+    while (result.isEmpty) {
+      try result = Some(f)
+      catch {
+        case TransientSinkError(status)
+            if retryOnStatus(status) && attempt < maxAttempts =>
+          sleep(delayMs)
+          delayMs *= 2
+          attempt += 1
+      }
+    }
+    result.get
+  }
 
   /** OpenSearch index mapping generated from the documents frame's
     * schema — the index-bootstrap step ahead of the first `_bulk` (the
@@ -127,31 +177,17 @@ object HttpBulk {
     }
   }
 
-  /** Split a partition's NDJSON lines into ≤maxBytes POST bodies. The
-    * budget is tracked in actual UTF-8 bytes (not UTF-16 char count,
-    * which undercounts multibyte-heavy log content up to 3×), so the
-    * bounded-executor-memory-per-flush claim holds; at most one
-    * overshooting line per body (check-before-append, like the
-    * reference's flushBytes threshold). */
-  private[streaming] def chunks(it: Iterator[String], maxBytes: Int): Iterator[Array[Byte]] =
-    new Iterator[Array[Byte]] {
-      def hasNext: Boolean = it.hasNext
-      def next(): Array[Byte] = {
-        val buf = new java.io.ByteArrayOutputStream
-        while (it.hasNext && buf.size < maxBytes) {
-          buf.write(it.next().getBytes("UTF-8"))
-          buf.write('\n')
-        }
-        buf.toByteArray
-      }
-    }
-
-  /** `chunks` with per-key body isolation: lines of different keys never
-    * share a POST body, so each Firehose batch's documents index under
-    * their own credential even when one partition interleaves tenants.
-    * Memory is bounded by (keys in flight) × maxBytes — keys per
-    * micro-batch are few (one per posting Firehose stream), and a key's
-    * buffer flushes the moment it crosses the byte budget. */
+  /** Split a partition's (key, NDJSON line) pairs into ≤maxBytes POST
+    * bodies, one key per body: lines of different keys never share a
+    * body, so each Firehose batch's documents index under their own
+    * credential even when one partition interleaves tenants. The budget
+    * is tracked in actual UTF-8 bytes (not UTF-16 char count, which
+    * undercounts multibyte-heavy log content up to 3×), so the
+    * bounded-executor-memory-per-flush claim holds; a key's buffer
+    * flushes the moment it crosses the budget (at most one overshooting
+    * line per body, like the reference's flushBytes threshold). Memory
+    * is bounded by (keys in flight) × maxBytes — keys per micro-batch
+    * are few (one per posting Firehose stream). */
   private[streaming] def chunksByKey(it: Iterator[(String, String)],
                                      maxBytes: Int): Iterator[(String, Array[Byte])] =
     new Iterator[(String, Array[Byte])] {
@@ -177,36 +213,28 @@ object HttpBulk {
       def next(): (String, Array[Byte]) = { fill(); ready.dequeue() }
     }
 
-  /** A channel writer (same shape Pipeline.sinkBatch takes) that POSTs
-    * the documents frame to `url` as `_bulk` NDJSON and lands per-item
-    * rejections under `errDir/batch=<id>`. Transient statuses
-    * (429/502/503/504, reference main.go:412) retry with exponential
-    * backoff inside the task; non-transient HTTP errors throw, failing
-    * the micro-batch for checkpoint replay — the reference's
-    * whole-batch-retry contract. */
-  /** `observeDocsAs` names an observe() node over the rendered lines
-    * (one per document), so documents_indexed rides the POST job itself
-    * — see ServiceMetrics. */
+  /** A channel writer that POSTs the documents frame to `url` as
+    * `_bulk` NDJSON and lands per-item rejections under
+    * `errDir/batch=<id>`. Transient statuses (429/502/503/504, reference
+    * main.go:412) retry with exponential backoff inside the task;
+    * non-transient HTTP errors and exhausted retries throw, failing the
+    * micro-batch for checkpoint replay — the reference's
+    * whole-batch-retry contract. `auth` is only the STATIC fallback for
+    * records that landed with no access_key of their own — a keyed
+    * record posts under ITS key (reference main.go:414, 422–424 —
+    * per-request client, per-request credential), and a keyless record
+    * never inherits another tenant's captured key. `observeDocsAs` names
+    * an observe() node over the rendered lines (one per document), so
+    * documents_indexed rides the POST job itself — see ServiceMetrics. */
   def bulkWriter(url: String, index: String, errDir: String,
                  auth: Option[String] = None,
                  flushBytes: Int = defaultFlushBytes,
                  maxAttempts: Int = 5, baseBackoffMs: Long = 50,
-                 authProvider: () => Option[String] = () => None,
                  rejectionCounter: Option[org.apache.spark.util.LongAccumulator] = None,
                  observeDocsAs: Option[String] = None): (DataFrame, Long) => Unit =
     (docs, batchId) => {
       val spark = docs.sparkSession
       import spark.implicits._
-      // resolved ONCE per micro-batch on the driver (the provider may
-      // close over non-serializable state, e.g. a rotating credential
-      // store); the resolved Option[String] is what the partition closure
-      // captures. It is only the STATIC fallback for records that landed
-      // with no access_key of their own — a keyed record posts under ITS
-      // key (reference main.go:414, 422–424 — per-request client,
-      // per-request credential), and a keyless record must never inherit
-      // another tenant's captured key, so never wire this to a
-      // last-seen-request credential.
-      val effAuth = authProvider().orElse(auth)
       val keyed = Pipeline.toBulkNdjsonKeyed(docs, index)
       val failed = observeDocsAs
         .fold(keyed)(n => keyed.observe(n, org.apache.spark.sql.functions.count(
@@ -214,10 +242,10 @@ object HttpBulk {
         .as[(String, String)]
         .mapPartitions { rows =>
           chunksByKey(rows, flushBytes).flatMap { case (key, body) =>
-            val chunkAuth = if (key.nonEmpty) Some("Basic " + key) else effAuth
-            val resp = Pipeline.withRetry(maxAttempts, baseBackoffMs) {
+            val chunkAuth = if (key.nonEmpty) Some("Basic " + key) else auth
+            val resp = withRetry(maxAttempts, baseBackoffMs) {
               val (status, rb) = post(url, body, chunkAuth)
-              if (Pipeline.retryOnStatus(status)) throw Pipeline.TransientSinkError(status)
+              if (retryOnStatus(status)) throw TransientSinkError(status)
               if (status >= 400) throw new java.io.IOException(s"bulk POST rejected: HTTP $status")
               rb
             }

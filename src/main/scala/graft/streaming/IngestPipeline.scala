@@ -134,7 +134,13 @@ object IngestPipeline {
       // path+query in ONE regex pass (r22): the optional group carries
       // its own $ anchor so a query that fails it (e.g. a newline past
       // the '?') leaves the group non-participating — "" — exactly what
-      // the separate regexp_extract(url, "\?(.*)$") produced
+      // the separate regexp_extract(url, "\?(.*)$") produced. One known
+      // divergence: the group is tied to the FIRST '?', while the old
+      // separate extract searched on and could start at a later one.
+      // With a second '?' after the newline ("a?b\nc?d") the old form
+      // gave url_query "d", the fused form gives null. It needs an
+      // embedded newline plus a second '?', and null is the saner answer
+      // for a multi-line url, so the fused form is kept.
       .withColumn("_pq", regexp_extract_struct(col("url_original"),
         "^([^?]*)(?:\\?(.*)$)?", Seq("path", "query")))
       .withColumn("url_path", col("_pq.path"))

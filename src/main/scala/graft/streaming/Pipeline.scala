@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -21,9 +21,10 @@ import graft.ops.Decode
   *
   * Spark-first re-expression: `readStream` micro-batches are the bulk
   * indexer's flush buffer (Trigger.ProcessingTime(5s) = FlushInterval);
-  * `foreachBatch` is the flush callback, wrapping each channel's write in
-  * the same retry/backoff envelope; the SUCCESS/ERROR prefixes become two
-  * sink directories routed by envelope-parse outcome; checkpointing +
+  * `foreachBatch` is the flush callback, and the retry/backoff envelope
+  * stays where the reference has it, inside the bulk transport's POST
+  * loop (HttpBulk); the SUCCESS/ERROR prefixes become two sink
+  * directories routed by envelope-parse outcome; checkpointing +
   * idempotent batch ids give the same at-least-once-with-replay contract,
   * and `dropDuplicatesWithinWatermark` is the replay dedup that contract
   * implies. The decode chain itself is `Decode.decodeFrame`, unchanged
@@ -34,36 +35,6 @@ import graft.ops.Decode
   * else is per-record projection that scales with executor count.
   */
 object Pipeline {
-
-  /** Transient sink failure carrying the would-be HTTP status. */
-  final case class TransientSinkError(status: Int)
-      extends RuntimeException(s"transient sink error: HTTP $status")
-
-  /** Statuses worth retrying (reference main.go:412 RetryOnStatus). */
-  val retryOnStatus: Set[Int] = Set(429, 502, 503, 504)
-
-  /** Exponential-backoff retry envelope (reference main.go:400–412 wraps
-    * every bulk flush in backoff.NewExponentialBackOff). Non-transient
-    * errors and exhausted attempts propagate — under checkpointed
-    * `foreachBatch` that fails the batch, which re-runs on restart: the
-    * reference's whole-batch Firehose retry, re-expressed. */
-  def withRetry[A](maxAttempts: Int = 5, baseBackoffMs: Long = 50,
-                   sleep: Long => Unit = Thread.sleep)(f: => A): A = {
-    var attempt = 1
-    var delayMs = baseBackoffMs
-    var result: Option[A] = None
-    while (result.isEmpty) {
-      try result = Some(f)
-      catch {
-        case TransientSinkError(status)
-            if retryOnStatus(status) && attempt < maxAttempts =>
-          sleep(delayMs)
-          delayMs *= 2
-          attempt += 1
-      }
-    }
-    result.get
-  }
 
   /** Per-record decode with encoding sniff. The reference decides
     * gzip-vs-plain per REQUEST by sniffing the body even when the header
@@ -98,7 +69,7 @@ object Pipeline {
     // per-record access key for sink auth isolation (reference
     // main.go:422–424 builds the indexer per request — each batch
     // indexes under ITS key); "" = none, sink falls back to its
-    // static/provider auth
+    // static auth
     val withKey =
       if (withReq.columns.contains("access_key")) withReq
       else withReq.withColumn("access_key", lit(""))
@@ -146,33 +117,34 @@ object Pipeline {
   }
 
   /** One micro-batch flush: decode once, persist, then write each
-    * channel from the persisted frame under its own retry envelope — the
-    * inflate + JSON parse run once per record, not once per channel.
-    * Writers are injectable so tests can inject 429s; each writer
-    * receives the batchId so it can be idempotent under replay (see
-    * channelWriter). `enrich` runs on the documents channel before its
-    * writer — the in-engine stand-in for the ES-side ingest pipeline the
-    * reference triggers per request (main.go:437; see IngestPipeline). */
-  def sinkBatch(writeOk: (DataFrame, Long) => Unit,
-                writeErr: (DataFrame, Long) => Unit,
-                enrich: DataFrame => DataFrame = identity,
-                maxAttempts: Int = 5, baseBackoffMs: Long = 50,
-                sleep: Long => Unit = Thread.sleep,
-                metrics: Option[ServiceMetrics] = None,
-                alerts: Option[((DataFrame, Long) => Unit, Seq[(Long, String)])] = None,
-                persistDocs: Boolean = false)(batch: Dataset[Row], batchId: Long): Unit = {
+    * channel from the persisted frame — the inflate + JSON parse run once
+    * per record, not once per channel. Actions run in a fixed order:
+    * SUCCESS archive (probe + write), bulk POST, alert matches, then
+    * ERROR (probe + write). Each writer receives the batchId so it can
+    * be idempotent under replay (see channelWriter); a writer that
+    * throws fails the micro-batch, which re-runs from the checkpoint.
+    * `enrich` runs on the documents channel before its writers — the
+    * in-engine stand-in for the ES-side ingest pipeline the reference
+    * triggers per request (main.go:437; see IngestPipeline). */
+  private def sinkBatch(archive: (DataFrame, Long) => Unit,
+                        bulk: Option[(DataFrame, Long) => Unit],
+                        writeErr: (DataFrame, Long) => Unit,
+                        enrich: DataFrame => DataFrame,
+                        metrics: Option[ServiceMetrics],
+                        alerts: Option[((DataFrame, Long) => Unit, Seq[(Long, String)])])(
+                        batch: Dataset[Row], batchId: Long): Unit = {
     val d = decoded(batch.toDF()).persist()
     try {
-      // docs feeds multiple plans whenever alerting is on (SUCCESS
-      // probe + write, ALERTS probe + write) or the writer itself is a
-      // composite (runHttp's archive + bulk POST set persistDocs) —
-      // persist so the enrich chain (regex scrub, geoip broadcast
-      // join) runs once per batch, not once per consumer
-      val multi = alerts.isDefined || persistDocs
+      // docs has a second consumer beyond the archive whenever a bulk
+      // target or the alert stage is on — persist so the enrich chain
+      // (regex scrub, geoip broadcast join) runs once per batch, not
+      // once per consumer
+      val multi = bulk.isDefined || alerts.isDefined
       val docs0 = enrich(flatten(d.filter(col("err").isNull)))
       val docs = if (multi) docs0.persist() else docs0
       try {
-        withRetry(maxAttempts, baseBackoffMs, sleep)(writeOk(docs, batchId))
+        archive(docs, batchId)
+        bulk.foreach(_(docs, batchId))
         // in-stream alerting (the OpenSearch percolate/watcher role):
         // the registered queries match each micro-batch's documents
         // AFTER enrich — alerts see what the index sees (e.g.
@@ -209,11 +181,10 @@ object Pipeline {
               regexp_replace(col("message"), "[{}\\[\\]\",:]+", " ")).as("text")),
             queries, keywordFields = Map.empty)
             .withColumnRenamed("rule_id", "query_id")
-          withRetry(maxAttempts, baseBackoffMs, sleep)(w(matches, batchId))
+          w(matches, batchId)
         }
       } finally if (multi) docs.unpersist()
-      withRetry(maxAttempts, baseBackoffMs, sleep)(
-        writeErr(deadLetter(d.filter(col("err").isNotNull)), batchId))
+      writeErr(deadLetter(d.filter(col("err").isNotNull)), batchId)
       // channel totals ride the writes themselves: the writers attach
       // observe() nodes (ServiceMetrics harvests them on action success)
       // so a flush costs zero extra count() jobs and the counted frame
@@ -253,24 +224,16 @@ object Pipeline {
 
   /** Render a documents frame as OpenSearch `_bulk` NDJSON — one
     * `{"index":{"_index":...,"_id":...}}` action line and one source
-    * line per document (reference main.go:546–560 builds exactly this
-    * pair per record; outgoing/elasticOutput.go the source shape). The
-    * `_id` is the exploded log event's id, which makes Firehose
-    * whole-batch redelivery idempotent at the index (same contract the
-    * reference gets from ES versioning on id). Returned as a
-    * `Dataset[String]` so a `foreachBatch` sink can POST partitions
-    * directly as request bodies. */
-  def toBulkNdjson(docs: DataFrame, index: String): Dataset[String] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    toBulkNdjsonKeyed(docs, index).select("lines").as[String]
-  }
-
-  /** `toBulkNdjson` plus the per-record sink credential as a separate
-    * `access_key` column ("" = none): the action/source lines never
-    * contain the key (it is transport auth, not document payload), and
-    * the bulk writer groups POST bodies by it so each batch indexes
-    * under its own key (reference main.go:422–424). */
+    * line per document in the `lines` column (reference main.go:546–560
+    * builds exactly this pair per record; outgoing/elasticOutput.go the
+    * source shape). The `_id` is the exploded log event's id, which
+    * makes Firehose whole-batch redelivery idempotent at the index (same
+    * contract the reference gets from ES versioning on id). The
+    * per-record sink credential rides as a separate `access_key` column
+    * ("" = none): the action/source lines never contain the key (it is
+    * transport auth, not document payload), and the bulk writer groups
+    * POST bodies by it so each batch indexes under its own key
+    * (reference main.go:422–424). */
   def toBulkNdjsonKeyed(docs: DataFrame, index: String): DataFrame = {
     // message_v is the typed VARIANT twin of the raw `message` wire
     // field (IngestPipeline binds it once for in-engine extraction and
@@ -290,12 +253,26 @@ object Pipeline {
         to_json(struct(dataCols.map(col).toSeq: _*))).as("lines"))
   }
 
-  /** Start the full ingest stream over a source of (event_id, batch_ms,
-    * data) envelope rows: decode (per-record encoding sniff) → route →
-    * SUCCESS/ + ERROR/ parquet channels (reference
-    * cloudformation-template.yaml:170–171), 5 s micro-batches (reference
-    * main.go:436), checkpointed for restart recovery. */
-  /** `alertQueries = Some(qs)` adds the in-stream percolation stage
+  /** Start the ingest stream over a source of (event_id, batch_ms,
+    * data) envelope rows (see SourceConfig): decode (per-record
+    * encoding sniff) → route → SUCCESS/ + ERROR/ parquet channels
+    * (reference cloudformation-template.yaml:170–171), 5 s micro-batches
+    * (reference main.go:436), checkpointed for restart recovery.
+    *
+    * `bulk = Some(target)` adds the HTTP `_bulk` transport: documents
+    * also POST per partition to the target (HttpBulk), and per-item bulk
+    * rejections land in `outDir/ERROR_ITEMS`. SUCCESS/ is written either
+    * way — with a target it is the archive copy of every delivered
+    * document (Firehose S3BackupMode AllData,
+    * cloudformation-template.yaml:162–171), the replay store if the
+    * index is lost. The archive runs before the POST and is
+    * overwrite-idempotent, so even a permanently failing sink leaves a
+    * complete replay store, and a replayed batch re-archives the same
+    * `batch=<id>` path instead of duplicating. documents_indexed is
+    * counted once per delivered document: on the POST job with a
+    * target, on the archive write without one.
+    *
+    * `alertQueries = Some(qs)` adds the in-stream percolation stage
     * with that registered rule set (qs: (query_id, query_string) rows —
     * each rule is a FULL Lucene query_string expression compiled by
     * QueryStringParser: phrases, negation, prefix wildcards, grouping —
@@ -305,118 +282,27 @@ object Pipeline {
     * channelWriter discipline as the delivery channels, counted on
     * `/metrics` as alerts_matched. */
   def run(source: DataFrame, outDir: String, checkpointDir: String,
+          bulk: Option[HttpBulk.Target] = None,
           trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
           enrich: DataFrame => DataFrame = identity,
           metrics: Option[ServiceMetrics] = None,
-          alertQueries: Option[Seq[(Long, String)]] = None): StreamingQuery =
+          alertQueries: Option[Seq[(Long, String)]] = None): StreamingQuery = {
+    val indexed = metrics.map(_.indexedMetric)
+    val post = bulk.map(t => HttpBulk.bulkWriter(t.postUrl, t.index, s"$outDir/ERROR_ITEMS",
+      flushBytes = t.flushBytes, baseBackoffMs = t.backoffMs,
+      rejectionCounter = metrics.map(_.bulkItemRejections),
+      observeDocsAs = indexed))
     source.writeStream
       .foreachBatch(sinkBatch(
-        channelWriter(s"$outDir/SUCCESS",
-          metrics.map(_.indexedMetric)),
-        channelWriter(s"$outDir/ERROR",
-          metrics.map(_.deadLetterMetric)),
-        enrich, metrics = metrics,
-        alerts = alertQueries.map(qs =>
+        channelWriter(s"$outDir/SUCCESS", if (bulk.isEmpty) indexed else None),
+        post,
+        channelWriter(s"$outDir/ERROR", metrics.map(_.deadLetterMetric)),
+        enrich, metrics,
+        alertQueries.map(qs =>
           (channelWriter(s"$outDir/ALERTS", metrics.map(_.alertsMetric)), qs))) _)
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .start()
-
-  /** Offline file-drop source (SURVEY §2.1 S1): landed Firehose batches
-    * as JSON-lines files dropped into `dir` — the zero-egress stand-in
-    * for the Kinesis/HTTP push source. One instance of the pluggable
-    * source seam: see `SourceConfig` for the envelope contract and the
-    * spool's knobs (maxFilesPerTrigger, cleanSource). */
-  def fileDropSource(spark: SparkSession, dir: String,
-                     maxFilesPerTrigger: Int = 16,
-                     cleanSource: Option[String] = None): DataFrame =
-    SourceConfig.fileDrop(dir, maxFilesPerTrigger, cleanSource).open(spark)
-
-  /** `run` with the HTTP `_bulk` transport as the delivery channel:
-    * documents POST per partition to `esUrl` (HttpBulk) AND archive to
-    * `outDir/SUCCESS` parquet (Firehose S3BackupMode AllData,
-    * cloudformation-template.yaml:162–171 — delivered documents keep an
-    * archive copy, the replay store if the index is lost); dead letters
-    * land in `outDir/ERROR`, per-item bulk rejections in
-    * `outDir/ERROR_ITEMS`. The archive runs first and is
-    * overwrite-idempotent, so even a permanently failing sink leaves a
-    * complete replay store, and bulk retries re-archive the same
-    * `batch=<id>` path instead of duplicating. Both writes read the one
-    * persisted decode (sinkBatch) — nothing re-inflates. */
-  /** `authProvider` is re-read at every micro-batch flush (driver side):
-    * a seam for rotating the STATIC fallback credential (config/secret
-    * store) without a stream restart. Per-tenant keys never come from
-    * here — each record carries its own access_key through the spool and
-    * posts under it (reference main.go:321–324, 422–424 build the
-    * indexer per request), and a keyless record falls back only to this
-    * static credential, never to another request's captured key.
-    *
-    * `pipelineParam` echoes the reference's per-request ingest-pipeline
-    * binding (main.go:437 stamps `pipeline=<name>` on the bulk request)
-    * as a query param on the `_bulk` URL — wire parity for an ES-side
-    * pipeline, while `enrich` is the same chain run in-engine. */
-  /** `flushBytes` / `bulkMaxAttempts` / `bulkBackoffMs` surface the
-    * transport's tuning knobs (the reference's flushBytes at main.go:46
-    * and backoff envelope at main.go:400–412 are likewise config):
-    * POST-body budget per flush and the transient-retry schedule. */
-  def runHttp(source: DataFrame, esUrl: String, index: String,
-              outDir: String, checkpointDir: String,
-              auth: Option[String] = None,
-              authProvider: () => Option[String] = () => None,
-              trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-              enrich: DataFrame => DataFrame = identity,
-              pipelineParam: Option[String] = None,
-              metrics: Option[ServiceMetrics] = None,
-              alertQueries: Option[Seq[(Long, String)]] = None,
-              flushBytes: Int = HttpBulk.defaultFlushBytes,
-              bulkMaxAttempts: Int = 5,
-              bulkBackoffMs: Long = 50): StreamingQuery = {
-    val effUrl = pipelineParam.fold(esUrl)(p =>
-      esUrl + (if (esUrl.contains("?")) "&" else "?") + "pipeline=" + p)
-    // the bulk POST counts documents_indexed (one observe in its lines
-    // plan); the archive writes the same rows unobserved — one count per
-    // delivered document, not two
-    val archive = channelWriter(s"$outDir/SUCCESS")
-    val bulk = HttpBulk.bulkWriter(effUrl, index, s"$outDir/ERROR_ITEMS", auth,
-      flushBytes = flushBytes,
-      maxAttempts = bulkMaxAttempts, baseBackoffMs = bulkBackoffMs,
-      authProvider = authProvider,
-      rejectionCounter = metrics.map(_.bulkItemRejections),
-      observeDocsAs = metrics.map(_.indexedMetric))
-    source.writeStream
-      .foreachBatch(sinkBatch(
-        (docs, batchId) => { archive(docs, batchId); bulk(docs, batchId) },
-        channelWriter(s"$outDir/ERROR",
-          metrics.map(_.deadLetterMetric)),
-        enrich, metrics = metrics,
-        alerts = alertQueries.map(qs =>
-          (channelWriter(s"$outDir/ALERTS", metrics.map(_.alertsMetric)), qs)),
-        persistDocs = true) _)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-  }
-
-  /** The Firehose HTTP response contract (reference main.go:358–363,
-    * structs at main.go:58–69): 200 echoes the REQUEST's id and
-    * timestamp; an error response carries the same pair plus
-    * `errorMessage`. Service plumbing rather than dataflow, but it
-    * completes the endpoint contract for anyone fronting `run` with an
-    * HTTP listener. */
-  def firehoseResponse(requestId: String, timestampMs: Long,
-                       errorMessage: Option[String] = None): String = {
-    def js(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val base = s""""requestId":${js(requestId)},"timestamp":$timestampMs"""
-    errorMessage match {
-      case Some(m) => s"""{$base,"errorMessage":${js(m)}}"""
-      case None => s"""{$base}"""
-    }
   }
 
   /** Event-time tumbling counts with a 10-minute watermark: events later

@@ -13,9 +13,10 @@ import graft.GraftExtensions
   *   runMain graft.streaming.Serve <dropDir> <outDir> <checkpointDir>
   *     [<esBulkUrl> <index>]
   *
-  * Without the URL args the SUCCESS channel is parquet (the offline /
-  * verify topology); with them, documents POST per partition to the
-  * endpoint.
+  * Either way the job is `Pipeline.run`: the SUCCESS/ERROR parquet
+  * channels are always written, and with the URL args documents also
+  * POST per partition to the endpoint (SUCCESS/ is then the archive
+  * copy).
   *
   * SPARK_GRAFT_HTTP_PORT=<port> additionally starts the Firehose HTTP
   * push front-end (FirehoseEndpoint) on that loopback port (0 = ephemeral),
@@ -63,7 +64,7 @@ object Serve {
 
     // delete processed drop files after commit: the service's spool must
     // not grow one file per HTTP request forever
-    val source = Pipeline.fileDropSource(spark, args(0), cleanSource = Some("delete"))
+    val source = SourceConfig.fileDrop(args(0), cleanSource = Some("delete")).open(spark)
 
     // In-engine ingest pipeline (reference main.go:437 binds
     // pipeline=<name> on every bulk request and ES runs
@@ -117,19 +118,16 @@ object Serve {
         }
       }
 
-    val query =
+    // No static sink auth: each record rides its own captured access_key
+    // to the sink ("Basic " + key, main.go:414), and a keyless record
+    // posts unauthenticated — inheriting the last-seen request's key
+    // would cross tenant credentials.
+    val bulk =
       if (args.length == 5)
-        Pipeline.runHttp(source, args(3), args(4), args(1), args(2),
-          // No authProvider wiring: each record rides its own captured
-          // access_key to the sink ("Basic " + key, main.go:414), and a
-          // keyless record posts unauthenticated — inheriting the
-          // last-seen request's key would cross tenant credentials.
-          trigger = trigger, enrich = enrich,
-          pipelineParam = Some(pipelineName).filter(_ != "none"),
-          metrics = Some(metrics), alertQueries = alertQueries)
-      else
-        Pipeline.run(source, args(1), args(2), trigger = trigger, enrich = enrich,
-          metrics = Some(metrics), alertQueries = alertQueries)
+        Some(HttpBulk.Target(args(3), args(4), pipeline = Some(pipelineName).filter(_ != "none")))
+      else None
+    val query = Pipeline.run(source, args(1), args(2), bulk = bulk, trigger = trigger,
+      enrich = enrich, metrics = Some(metrics), alertQueries = alertQueries)
     // SPARK_GRAFT_DEDUP_DIR=<dir>: the staged dedup topology — a SECOND
     // streaming query reads the SUCCESS archive as a file stream and
     // runs the incremental near-dup check against the persisted

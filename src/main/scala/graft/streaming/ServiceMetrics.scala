@@ -83,8 +83,8 @@ final class ServiceMetrics(spark: SparkSession) {
     spark.sparkContext.longAccumulator("graft.bulk_item_rejections")
 
   // Harvest the writers' observe() metrics. onSuccess only: a failed
-  // write retries (withRetry / checkpoint replay) and counts on the
-  // attempt that actually committed. Kept as a field so close() can
+  // write fails its micro-batch, which re-runs under checkpoint replay
+  // and counts on the attempt that actually committed. Kept as a field so close() can
   // deregister — a leaked listener would keep processing every query
   // event on the shared session for the process lifetime.
   private val listener = new QueryExecutionListener {

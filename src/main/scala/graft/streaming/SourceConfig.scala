@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 
 /** The pluggable push-source seam (SURVEY §2.1 S1).
   *
-  * The ingest topology (`Pipeline.run` / `runHttp`) consumes an
+  * The ingest topology (`Pipeline.run`) consumes an
   * ENVELOPE FRAME, not a transport: any Structured Streaming source
   * that delivers `SourceConfig.schema` drops in — the file-drop spool
   * the HTTP front-end feeds, a `MemoryStream` in tests, Spark's own
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.StructType
   *    (reference main.go:260–266).
   *  - `access_key STRING` — per-batch sink credential for auth
   *    isolation (reference main.go:422–424); "" or absent = none,
-  *    the sink uses its static/provider fallback.
+  *    the sink uses its static fallback.
   * Only `event_id`, `batch_ms`, `data` are required — `Pipeline.decoded`
   * tolerates sources without the trailing two columns (a MemoryStream
   * of triples) by applying those fallbacks.

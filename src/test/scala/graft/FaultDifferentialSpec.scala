@@ -11,10 +11,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{Pipeline, Replay}
+import graft.streaming.{HttpBulk, Pipeline, Replay}
 
 /** Randomized fault-injection differential for the live service path
-  * (FirehoseEndpoint-shaped source → Pipeline.runHttp → HttpBulk), the
+  * (FirehoseEndpoint-shaped source → Pipeline.run → HttpBulk), the
   * r17-verdict task: the batch/store layers have adversarial evidence,
   * so the streaming path gets the same discipline. Each seed draws a
   * fault SCHEDULE — mid-stream 429/502/503/504 bursts per POST body,
@@ -170,11 +170,10 @@ class FaultDifferentialSpec extends SparkSpec {
       val outDir = tmp(s"fault-out-$seed")
       val ckpt = tmp(s"fault-ckpt-$seed")
       val in = MemoryStream[(Long, Long, String)]
-      def start() = Pipeline.runHttp(
-        in.toDF().toDF("event_id", "batch_ms", "data"),
-        stub.url, "graft-docs", outDir, ckpt,
+      def start() = Pipeline.run(
+        in.toDF().toDF("event_id", "batch_ms", "data"), outDir, ckpt,
+        bulk = Some(HttpBulk.Target(stub.url, "graft-docs", flushBytes = 200, backoffMs = 1)),
         trigger = Trigger.ProcessingTime(0L),
-        flushBytes = 200, bulkBackoffMs = 1,
         alertQueries = alerts)
       var q = start()
       try {
@@ -211,11 +210,10 @@ class FaultDifferentialSpec extends SparkSpec {
       val ref = new FaultyIndex(badIds, _ => 0)
       val refOut = tmp(s"fault-ref-out-$seed")
       val inRef = MemoryStream[(Long, Long, String)]
-      val qRef = Pipeline.runHttp(
-        inRef.toDF().toDF("event_id", "batch_ms", "data"),
-        ref.url, "graft-docs", refOut, tmp(s"fault-ref-ckpt-$seed"),
+      val qRef = Pipeline.run(
+        inRef.toDF().toDF("event_id", "batch_ms", "data"), refOut, tmp(s"fault-ref-ckpt-$seed"),
+        bulk = Some(HttpBulk.Target(ref.url, "graft-docs", flushBytes = 200, backoffMs = 1)),
         trigger = Trigger.ProcessingTime(0L),
-        flushBytes = 200, bulkBackoffMs = 1,
         alertQueries = alerts)
       try {
         chunks.foreach { chunk => inRef.addData(chunk: _*); qRef.processAllAvailable() }

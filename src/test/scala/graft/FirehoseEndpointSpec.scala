@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{FirehoseEndpoint, Pipeline}
+import graft.streaming.{FirehoseEndpoint, HttpBulk, Pipeline, SourceConfig}
 
 /** The HTTP push front-end over loopback (reference main.go:203–365):
   * /ping, request-id extraction with the "manual" fallback, content
@@ -56,6 +56,24 @@ class FirehoseEndpointSpec extends SparkSpec {
     val ep = new FirehoseEndpoint(tmp("fh-ping"))
     try assert(call(s"${ep.url}/ping", "GET") == ((200, """{"message":"pong"}""")))
     finally ep.stop()
+  }
+
+  test("stop() ends every handler thread, so a drained Serve can exit") {
+    def handlerThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(FirehoseEndpoint.threadPrefix)).toSet
+    val before = handlerThreads()
+    val ep = new FirehoseEndpoint(tmp("fh-stop"))
+    val (status, _) = try call(s"${ep.url}/firehose", "POST",
+      envelope("r", 1L, b64(cwBody("st"))).getBytes(UTF_8), json)
+    finally ep.stop()
+    assert(status == 200)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var alive = handlerThreads() -- before
+    while (alive.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(20)
+      alive = handlerThreads() -- before
+    }
+    assert(alive.isEmpty, s"endpoint threads still alive after stop(): ${alive.map(_.getName)}")
   }
 
   test("200 echoes the BODY's requestId/timestamp; header id stamps the records") {
@@ -234,7 +252,7 @@ class FirehoseEndpointSpec extends SparkSpec {
         json + ("Content-Encoding" -> "gzip", "X-Amz-Firehose-Request-Id" -> "fh-gzip"))
       assert(s1 == 200 && s2 == 200)
 
-      val q = Pipeline.run(Pipeline.fileDropSource(spark, dropDir),
+      val q = Pipeline.run(SourceConfig.fileDrop(dropDir).open(spark),
         outDir, tmp("fh-e2e-ckpt"), trigger = Trigger.AvailableNow())
       try q.processAllAvailable() finally q.stop()
 
@@ -278,12 +296,13 @@ class FirehoseEndpointSpec extends SparkSpec {
         envelope("r", 1L, b64(cwBody("s6"))).getBytes(UTF_8),
         json + ("X-Amz-Firehose-Access-Key" -> "dXNlcjpwdw=="))
       assert(s1 == 200)
-      // the service wiring Serve uses: no authProvider — the key rides
+      // the service wiring Serve uses: no static auth — the key rides
       // each record through the spool and the sink prefixes "Basic "
       // (reference main.go:414)
-      val q = Pipeline.runHttp(
-        Pipeline.fileDropSource(spark, dropDir), bulkUrl, "graft-docs",
+      val q = Pipeline.run(
+        SourceConfig.fileDrop(dropDir).open(spark),
         tmp("fh-s6-out"), tmp("fh-s6-ckpt"),
+        bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow())
       try q.processAllAvailable() finally q.stop()
       assert(auths.size > 0 && auths.toArray.toSet == Set("Basic dXNlcjpwdw=="),
@@ -324,9 +343,10 @@ class FirehoseEndpointSpec extends SparkSpec {
       val (s3, _) = call(s"${ep.url}/firehose", "POST",
         envelope("r3", 3L, b64(cwBody("tc"))).getBytes(UTF_8), json)
       assert(s1 == 200 && s2 == 200 && s3 == 200)
-      val q = Pipeline.runHttp(
-        Pipeline.fileDropSource(spark, dropDir), bulkUrl, "graft-docs",
+      val q = Pipeline.run(
+        SourceConfig.fileDrop(dropDir).open(spark),
         tmp("fh-iso-out"), tmp("fh-iso-ckpt"),
+        bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow())
       try q.processAllAvailable() finally q.stop()
       val byAuth = pairs.toArray(Array.empty[(String, String)])
@@ -393,9 +413,10 @@ class FirehoseEndpointSpec extends SparkSpec {
         envelope("r1", 1L, b64(cwBody("ma")), b64(cwBody("mb")), b64("garbage")).getBytes(UTF_8), json)
       val (s2, _) = call(s"${ep.url}/firehose", "POST", "{oops".getBytes(UTF_8), json)
       assert(s1 == 200 && s2 == 400)
-      val q = Pipeline.runHttp(
-        Pipeline.fileDropSource(spark, dropDir), bulkUrl, "graft-docs",
+      val q = Pipeline.run(
+        SourceConfig.fileDrop(dropDir).open(spark),
         tmp("fh-met-out"), tmp("fh-met-ckpt"),
+        bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow(), metrics = Some(metrics))
       try q.processAllAvailable() finally q.stop()
 
@@ -457,7 +478,7 @@ class FirehoseEndpointSpec extends SparkSpec {
     }
     def runOnce(): Unit = {
       val q = Pipeline.run(
-        Pipeline.fileDropSource(spark, dropDir, cleanSource = Some("delete")),
+        SourceConfig.fileDrop(dropDir, cleanSource = Some("delete")).open(spark),
         outDir, ckpt, trigger = Trigger.AvailableNow())
       try q.processAllAvailable() finally q.stop()
     }

@@ -24,6 +24,8 @@ class HttpBulkSpec extends SparkSpec {
     * contract the reference's OnSuccess/OnFailure callbacks consume). */
   private class BulkStub(fail429First: Int = 0, badIds: Set[String] = Set.empty) {
     val hits = new AtomicInteger(0)
+    /** Every request body, answered or not — POSTs per body. */
+    val attempted = new ConcurrentLinkedQueue[String]()
     val bodies = new ConcurrentLinkedQueue[String]()
     val authHeaders = new ConcurrentLinkedQueue[String]()
     /** (Authorization-or-"", body) per accepted request — pairing is what
@@ -34,6 +36,7 @@ class HttpBulkSpec extends SparkSpec {
     server.createContext("/_bulk", (ex: HttpExchange) => {
       hits.incrementAndGet()
       val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+      attempted.add(body)
       if (remaining429.getAndDecrement() > 0) {
         ex.sendResponseHeaders(429, -1)
         ex.close()
@@ -261,9 +264,9 @@ class HttpBulkSpec extends SparkSpec {
       val in = MemoryStream[(Long, Long, String)]
       val outDir = tmp("http-sink")
       in.addData((1L, 10L, b64(goodBody)), (2L, 20L, b64("not an envelope")))
-      val q = Pipeline.runHttp(
-        in.toDF().toDF("event_id", "batch_ms", "data"),
-        stub.url, "graft-docs", outDir, tmp("http-ckpt"),
+      val q = Pipeline.run(
+        in.toDF().toDF("event_id", "batch_ms", "data"), outDir, tmp("http-ckpt"),
+        bulk = Some(HttpBulk.Target(stub.url, "graft-docs")),
         trigger = Trigger.AvailableNow(),
         // the alerting wire must work on the HTTP topology too: m1
         // matches a registered single-term query, m2 does not
@@ -287,6 +290,37 @@ class HttpBulkSpec extends SparkSpec {
         assert(!backup.columns.contains("access_key"),
           "the sink credential must not land in the archive")
       } finally q.stop()
+    } finally stub.stop()
+  }
+
+  test("a sink that always answers 429 fails the batch after maxAttempts POSTs per body") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val goodBody =
+      """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/a","logStream":"s1",
+        |"subscriptionFilters":["f"],"logEvents":[{"id":"t1","timestamp":1000,"message":"m"}]}""".stripMargin
+    val b64 = java.util.Base64.getEncoder.encodeToString(goodBody.getBytes("UTF-8"))
+    val stub = new BulkStub(fail429First = Int.MaxValue)
+    try {
+      val in = MemoryStream[(Long, Long, String)]
+      in.addData((1L, 10L, b64))
+      val q = Pipeline.run(
+        in.toDF().toDF("event_id", "batch_ms", "data"),
+        tmp("always429-out"), tmp("always429-ckpt"),
+        bulk = Some(HttpBulk.Target(stub.url, "graft-docs", backoffMs = 1)),
+        trigger = Trigger.AvailableNow())
+      val failure = try intercept[Exception](q.processAllAvailable()) finally q.stop()
+      // the task-side POST loop is the only retry layer: its transient
+      // error reaches the driver inside a SparkException, never bare
+      val chain = Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[org.apache.spark.SparkException]),
+        s"no SparkException in the cause chain: $chain")
+      assert(chain.contains(HttpBulk.TransientSinkError(429)),
+        s"no TransientSinkError(429) in the cause chain: $chain")
+      val perBody = stub.attempted.toArray.toSeq.groupBy(identity).values.map(_.size).toSeq
+      assert(perBody.nonEmpty && perBody.forall(_ == 5),
+        s"each body must see exactly maxAttempts = 5 POSTs, not 25: $perBody")
+      assert(stub.bodies.isEmpty, "nothing may be accepted")
     } finally stub.stop()
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{FirehoseEndpoint, IngestPipeline, Pipeline}
+import graft.streaming.{FirehoseEndpoint, HttpBulk, IngestPipeline, Pipeline, SourceConfig}
 
 /** The in-engine ingest pipeline (reference
   * ingest/one-pipeline-to-rule-them-all.json routing +
@@ -172,13 +172,14 @@ class IngestPipelineSpec extends SparkSpec {
            |{"data":"${b64(cw("/app/http", "pl-1", "hello world"))}"}]}""".stripMargin
       assert(post(s"${ep.url}/firehose", env) == 200)
 
-      val q = Pipeline.runHttp(
-        Pipeline.fileDropSource(spark, dropDir),
-        s"http://127.0.0.1:${bulk.getAddress.getPort}/_bulk", "graft-docs",
+      val q = Pipeline.run(
+        SourceConfig.fileDrop(dropDir).open(spark),
         tmp("ing-out"), tmp("ing-ckpt"),
+        bulk = Some(HttpBulk.Target(
+          s"http://127.0.0.1:${bulk.getAddress.getPort}/_bulk", "graft-docs",
+          pipeline = Some("axway-ingest"))),
         trigger = Trigger.AvailableNow(),
-        enrich = IngestPipeline.enrich(_, Some(testDim)),
-        pipelineParam = Some("axway-ingest"))
+        enrich = IngestPipeline.enrich(_, Some(testDim)))
       try q.processAllAvailable() finally q.stop()
 
       assert(uris.size > 0 && uris.toArray.forall(_.toString.contains("pipeline=axway-ingest")),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.Pipeline
+import graft.streaming.{FirehoseEndpoint, HttpBulk, Pipeline, SourceConfig}
 
 /** Structured Streaming semantics through MemoryStream: watermarked
   * tumbling aggregation (late-data drop), replay dedup, the SUCCESS/ERROR
@@ -354,7 +354,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, 10L, "/app/a", "s1", "e1-0", 1000L, """{"k":1}"""))
       .toDF("event_id", "batch_ms", "logGroup", "logStream", "event_ref", "event_ms", "message")
-    val lines = Pipeline.toBulkNdjson(docs, "graft-docs").collect()
+    val lines = Pipeline.toBulkNdjsonKeyed(docs, "graft-docs").select("lines").as[String].collect()
     assert(lines.length == 1)
     val Array(action, source) = lines.head.split("\n")
     assert(action == """{"index":{"_index":"graft-docs","_id":"e1-0"}}""")
@@ -364,9 +364,9 @@ class StreamingSpec extends SparkSpec {
   test("retry envelope: transient 429s back off exponentially then succeed") {
     var attempts = 0
     val sleeps = scala.collection.mutable.ArrayBuffer[Long]()
-    val out = Pipeline.withRetry(maxAttempts = 5, baseBackoffMs = 50, sleep = sleeps += _) {
+    val out = HttpBulk.withRetry(maxAttempts = 5, baseBackoffMs = 50, sleep = sleeps += _) {
       attempts += 1
-      if (attempts < 3) throw Pipeline.TransientSinkError(429)
+      if (attempts < 3) throw HttpBulk.TransientSinkError(429)
       "flushed"
     }
     assert(out == "flushed" && attempts == 3)
@@ -375,10 +375,10 @@ class StreamingSpec extends SparkSpec {
 
   test("retry envelope: non-retryable status propagates immediately") {
     var attempts = 0
-    val ex = intercept[Pipeline.TransientSinkError] {
-      Pipeline.withRetry(maxAttempts = 5, baseBackoffMs = 1, sleep = _ => ()) {
+    val ex = intercept[HttpBulk.TransientSinkError] {
+      HttpBulk.withRetry(maxAttempts = 5, baseBackoffMs = 1, sleep = _ => ()) {
         attempts += 1
-        throw Pipeline.TransientSinkError(400)
+        throw HttpBulk.TransientSinkError(400)
       }
     }
     assert(ex.status == 400 && attempts == 1)
@@ -386,10 +386,10 @@ class StreamingSpec extends SparkSpec {
 
   test("retry envelope: attempts exhaust and the batch fails (Firehose replays it)") {
     var attempts = 0
-    val ex = intercept[Pipeline.TransientSinkError] {
-      Pipeline.withRetry(maxAttempts = 3, baseBackoffMs = 1, sleep = _ => ()) {
+    val ex = intercept[HttpBulk.TransientSinkError] {
+      HttpBulk.withRetry(maxAttempts = 3, baseBackoffMs = 1, sleep = _ => ()) {
         attempts += 1
-        throw Pipeline.TransientSinkError(503)
+        throw HttpBulk.TransientSinkError(503)
       }
     }
     assert(ex.status == 503 && attempts == 3)
@@ -577,7 +577,7 @@ class StreamingSpec extends SparkSpec {
     Files.writeString(java.nio.file.Paths.get(dropDir, "batch-0001.json"),
       s"""{"event_id":1,"batch_ms":10,"data":"$b64"}""")
     val outDir = tmp("graft-drop-sink")
-    val q = Pipeline.run(Pipeline.fileDropSource(spark, dropDir),
+    val q = Pipeline.run(SourceConfig.fileDrop(dropDir).open(spark),
       outDir, tmp("graft-drop-ckpt"), trigger = Trigger.AvailableNow())
     try {
       q.processAllAvailable()
@@ -589,7 +589,6 @@ class StreamingSpec extends SparkSpec {
 
   test("pluggable source seam: a SourceConfig-opened source drives the same e2e") {
     import spark.implicits._
-    import graft.streaming.SourceConfig
     val goodBody =
       """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/seam","logStream":"s1",
         |"subscriptionFilters":["f"],"logEvents":[{"id":"sc1","timestamp":1000,"message":"m"}]}""".stripMargin
@@ -614,7 +613,6 @@ class StreamingSpec extends SparkSpec {
 
   test("pluggable source seam: the rate-source adapter drives the same topology unchanged") {
     import spark.implicits._
-    import graft.streaming.SourceConfig
     // Spark's rate-micro-batch source has its OWN schema (timestamp,
     // value) — the adapter maps it onto the envelope contract and the
     // SAME Pipeline.run topology consumes it with zero topology edits:
@@ -704,7 +702,7 @@ class StreamingSpec extends SparkSpec {
       assert(row == (("1.2", "C-X", "d.example.com", "d.example.com")),
         s"variant-path enrichment mismatch: $row")
       // …and the wire lines carry the raw message, never the twin
-      val line = Pipeline.toBulkNdjson(ok, "idx").head()
+      val line = Pipeline.toBulkNdjsonKeyed(ok, "idx").select("lines").as[String].head()
       assert(!line.contains("message_v"),
         s"the variant twin leaked into the bulk source line: $line")
       // the raw message string rides the wire (JSON-escaped inside the
@@ -770,23 +768,6 @@ class StreamingSpec extends SparkSpec {
     assert(errs.toSeq == Seq("empty logEvents"), s"got ${errs.toSeq}")
   }
 
-  test("sink batch: both channels flush under retry with injected 429s") {
-    import spark.implicits._
-    val goodBody =
-      """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/a","logStream":"s1",
-        |"subscriptionFilters":["f"],"logEvents":[{"id":"e1","timestamp":1000,"message":"m"}]}""".stripMargin
-    val b64 = java.util.Base64.getEncoder.encodeToString(goodBody.getBytes("UTF-8"))
-    val batch = Seq((1L, 10L, b64)).toDF("event_id", "batch_ms", "data")
-
-    var okWrites = 0; var okAttempts = 0
-    Pipeline.sinkBatch(
-      writeOk = (df, _) => { okAttempts += 1
-        if (okAttempts < 3) throw Pipeline.TransientSinkError(429)
-        okWrites += df.count().toInt },
-      writeErr = (_, _) => (), sleep = _ => ())(batch, 0L)
-    assert(okAttempts == 3 && okWrites == 1)
-  }
-
   test("checkpoint restart resumes from committed offsets without duplicating output") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -815,11 +796,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("firehose response contract: echo the request ids; error body adds errorMessage") {
-    assert(Pipeline.firehoseResponse("req-1", 123L) ==
+    assert(FirehoseEndpoint.firehoseResponse("req-1", 123L) ==
       """{"requestId":"req-1","timestamp":123}""")
     // control chars escape as \ uXXXX (written split here — Scala
     // pre-processes unicode escapes even inside triple quotes)
-    assert(Pipeline.firehoseResponse("r\"q", 5L, Some("bad \"body\"\n")) ==
+    assert(FirehoseEndpoint.firehoseResponse("r\"q", 5L, Some("bad \"body\"\n")) ==
       "{\"requestId\":\"r\\\"q\",\"timestamp\":5,\"errorMessage\":\"bad \\\"body\\\"" + "\\" + "u000a\"}")
   }
 
