@@ -30,23 +30,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Static conf, must land before the first session: the default
-      // 100-entry generated-class cache thrashes under 72 queries × a
-      // few codegen stages each — the r5 "geoip regression" was exactly
-      // this (isolated runs matched r4; only the full rig was slower).
-      // A service running this many distinct plans wants the same bump.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Session.fromEnv()
     // JIT/codegen warmup on the smallest sf so per-query numbers measure
     // the plan, not first-call class generation.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -74,7 +58,7 @@ object Bench {
     // total / calibration is the load-normalized figure a cross-round
     // comparison should use (SURVEY §6 documents the rule). min-of-3
     // after one warm run, same one-sided-noise estimator as the queries.
-    val calCpus = cpus.toInt
+    val calCpus = spark.sparkContext.defaultParallelism
     def calibrate(): Double = {
       def one(): Double = {
         val t0 = System.nanoTime()

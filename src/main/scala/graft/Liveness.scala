@@ -127,17 +127,14 @@ object Liveness {
           Some(e.toString.linesIterator.next().take(200)))
     }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   private def reportJson(r: KeyReport): String = {
-    val probes = r.probes.map { case (l, ok) => s"${jstr(l)}:$ok" }
+    val probes = r.probes.map { case (l, ok) => s"${Json.quote(l)}:$ok" }
       .mkString("{", ",", "}")
-    def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
+    def arr(xs: Seq[String]) = xs.map(Json.quote).mkString("[", ",", "]")
     s"""{"rows":${r.rows},"flagged":${r.flagged},"const_cols":${arr(r.constCols)},""" +
       s""""null_cols":${arr(r.nullCols)},"const_exempt":${arr(r.constExempt)},""" +
       s""""unchecked_cols":${arr(r.uncheckedCols)},"probes":$probes""" +
-      r.error.fold("")(e => s""","error":${jstr(e)}""") + "}"
+      r.error.fold("")(e => s""","error":${Json.quote(e)}""") + "}"
   }
 
   /** argv: <outJson> <sfDir> [<sfDir> …] — audits every registry key at
@@ -146,18 +143,7 @@ object Liveness {
     require(args.length >= 2, "usage: Liveness <outJson> <sfDir> [<sfDir>...]")
     val outPath = args(0)
     val dirs = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Session.fromEnv()
     val nProbes = Registry.all.map(_.liveness.size).sum
     val perSf = dirs.map { dir =>
       registerBaseTables(spark, dir)
@@ -168,14 +154,14 @@ object Liveness {
       dir -> reports
     }
     val body = perSf.map { case (dir, reports) =>
-      jstr(dir) + ":{" +
-        reports.map(r => s"${jstr(r.name)}:${reportJson(r)}").mkString(",") + "}"
+      Json.quote(dir) + ":{" +
+        reports.map(r => s"${Json.quote(r.name)}:${reportJson(r)}").mkString(",") + "}"
     }.mkString(",")
     val allFlagged = perSf.flatMap(_._2).filter(_.flagged).map(_.name).distinct.sorted
     val summary =
       s"""{"metric":"liveness","keys":${Registry.all.size},"declared_probes":$nProbes,""" +
-        s""""sf_dirs":${dirs.map(jstr).mkString("[", ",", "]")},""" +
-        s""""flagged":${allFlagged.map(jstr).mkString("[", ",", "]")},""" +
+        s""""sf_dirs":${dirs.map(Json.quote).mkString("[", ",", "]")},""" +
+        s""""flagged":${allFlagged.map(Json.quote).mkString("[", ",", "]")},""" +
         s""""n_flagged":${allFlagged.size}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (s"""{"summary":$summary,"per_sf":{$body}}""" + "\n").getBytes("UTF-8"))

@@ -438,31 +438,16 @@ object Decode {
     payload.select(col("event_id"), col("ts_ms").as("batch_ms"), data.as("data"))
   }
 
-  /** The frame-level decode transform: (event_id, batch_ms, data) →
-    * flattened documents. Pure column expressions, so it runs unchanged
-    * on batch frames AND streaming frames (streaming/Pipeline.scala). */
-  def decodeFrame(frame: DataFrame, withGzip: Boolean): DataFrame = {
-    val decoded = frame
-      .withColumn("raw",
-        (if (withGzip) gunzip(unbase64(col("data"))) else unbase64(col("data"))).cast("string"))
-      .withColumn("d", from_json(col("raw"), org.apache.spark.sql.types.StructType.fromDDL(cwSchemaPruned)))
-    decoded
-      .select(
-        col("event_id"), col("batch_ms"),
-        col("d.logGroup").as("logGroup"), col("d.logStream").as("logStream"),
-        explode(col("d.logEvents")).as("ev"))
-      .select(
-        col("event_id"), col("batch_ms"), col("logGroup"), col("logStream"),
-        col("ev.id").as("event_ref"),
-        col("ev.timestamp").as("event_ms"),
-        jsonOrText(col("ev.message")).as("message"))
-  }
-
-  /** The full reference dataflow F1→F3→X2→F4→F5→F6 on one frame.
+  /** The full reference dataflow F1→F3→X2→F4→F5→F6 on one frame, run
+    * through the service's own decode path — the documents channel of
+    * `Pipeline.route` (per-record gzip sniff, envelope parse, explode,
+    * json-or-text) — projected to the 7 document columns.
     * `withGzip=false` keeps it DuckDB-expressible; the gzip variant is the
     * true reference semantics (base64(gzip(json)), main.go:463–479). */
   def pipeline(s: SparkSession, dir: String, withGzip: Boolean): DataFrame =
-    decodeFrame(firehoseData(s, dir, withGzip), withGzip)
+    graft.streaming.Pipeline.route(firehoseData(s, dir, withGzip))._1
+      .select("event_id", "batch_ms", "logGroup", "logStream",
+        "event_ref", "event_ms", "message")
 
   private val pipelineOracle: String = Synth.withMsg(
     """, enc AS (SELECT event_id, ts_ms AS batch_ms,

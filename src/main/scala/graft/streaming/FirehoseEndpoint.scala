@@ -9,6 +9,8 @@ import java.util.concurrent.atomic.AtomicLong
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.Json
+
 /** The reference's HTTP service surface (reference main.go:203–365): a
   * loopback push front-end accepting Firehose delivery batches and
   * handing them to the Structured Streaming dataflow.
@@ -64,16 +66,9 @@ object FirehoseEndpoint {
     * `errorMessage`. */
   def firehoseResponse(requestId: String, timestampMs: Long,
                        errorMessage: Option[String] = None): String = {
-    def js(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val base = s""""requestId":${js(requestId)},"timestamp":$timestampMs"""
+    val base = s""""requestId":${Json.quote(requestId)},"timestamp":$timestampMs"""
     errorMessage match {
-      case Some(m) => s"""{$base,"errorMessage":${js(m)}}"""
+      case Some(m) => s"""{$base,"errorMessage":${Json.quote(m)}}"""
       case None => s"""{$base}"""
     }
   }

@@ -6,6 +6,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.DataFrame
 
+import graft.Json
+
 /** HTTP transport for the OpenSearch `_bulk` sink (reference
   * main.go:399–451: esutil.BulkIndexer with numWorkers, flushBytes,
   * RetryOnStatus + backoff; main.go:546–584: enqueue with per-item
@@ -112,15 +114,8 @@ object HttpBulk {
     }
     // field names come from a parquet schema and may contain any
     // character — escape for JSON, never interpolate raw
-    def js(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
     def obj(st: StructType): String =
-      st.fields.map(f => s""""${js(f.name)}":${field(f.name, f.dataType)}""")
+      st.fields.map(f => s"${Json.quote(f.name)}:${field(f.name, f.dataType)}")
         .mkString("""{"properties":{""", ",", "}}")
     s"""{"mappings":${obj(schema)}}"""
   }
@@ -229,7 +224,7 @@ object HttpBulk {
   def bulkWriter(url: String, index: String, errDir: String,
                  auth: Option[String] = None,
                  flushBytes: Int = defaultFlushBytes,
-                 maxAttempts: Int = 5, baseBackoffMs: Long = 50,
+                 baseBackoffMs: Long = 50,
                  rejectionCounter: Option[org.apache.spark.util.LongAccumulator] = None,
                  observeDocsAs: Option[String] = None): (DataFrame, Long) => Unit =
     (docs, batchId) => {
@@ -243,7 +238,7 @@ object HttpBulk {
         .mapPartitions { rows =>
           chunksByKey(rows, flushBytes).flatMap { case (key, body) =>
             val chunkAuth = if (key.nonEmpty) Some("Basic " + key) else auth
-            val resp = withRetry(maxAttempts, baseBackoffMs) {
+            val resp = withRetry(baseBackoffMs = baseBackoffMs) {
               val (status, rb) = post(url, body, chunkAuth)
               if (retryOnStatus(status)) throw TransientSinkError(status)
               if (status >= 400) throw new java.io.IOException(s"bulk POST rejected: HTTP $status")

@@ -27,8 +27,9 @@ import graft.ops.Decode
   * directories routed by envelope-parse outcome; checkpointing +
   * idempotent batch ids give the same at-least-once-with-replay contract,
   * and `dropDuplicatesWithinWatermark` is the replay dedup that contract
-  * implies. The decode chain itself is `Decode.decodeFrame`, unchanged
-  * between batch and streaming — the point of keeping it declarative.
+  * implies. The decode chain itself is `route`, unchanged between batch
+  * and streaming (the `k2e_pipeline_*` keys run it through
+  * `Decode.pipeline`) — the point of keeping it declarative.
   *
   * At 100 TB/day posture: the only stateful operators (windowed agg,
   * dedup) are watermark-bounded so state stores stay finite; everything

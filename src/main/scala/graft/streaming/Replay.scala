@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-import graft.GraftExtensions
+import graft.Session
 
 /** Archive replay — the recovery tool the SUCCESS/ channel exists for
   * (reference cloudformation-template.yaml:162–171: Firehose
@@ -44,7 +44,7 @@ object Replay {
   def replay(spark: SparkSession, archiveDir: String, esUrl: String,
              index: String, errDir: String,
              auth: Option[String] = None,
-             maxAttempts: Int = 5, baseBackoffMs: Long = 50,
+             baseBackoffMs: Long = 50,
              mappingUrl: Option[String] = None): Long = {
     // ignoreMissingFiles: replaying while the ingest stream is live is
     // the tool's normal use, and a checkpoint-replayed micro-batch can
@@ -66,7 +66,7 @@ object Replay {
         throw new java.io.IOException(s"mapping PUT to $u failed: HTTP $status $body")
     }
     val writer = HttpBulk.bulkWriter(esUrl, index, errDir, auth,
-      maxAttempts = maxAttempts, baseBackoffMs = baseBackoffMs)
+      baseBackoffMs = baseBackoffMs)
     writer(docs, 0L)
     // reported count: an exact count() AFTER the POST job — a
     // footer-driven parquet count is trivial next to re-POSTing the
@@ -79,15 +79,7 @@ object Replay {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: Replay <archiveDir> <esBulkUrl> <index> <errDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv()
     val n = replay(spark, args(0), args(1), args(2), args(3),
       auth = sys.env.get("SPARK_GRAFT_REPLAY_AUTH").map("Basic " + _),
       // SPARK_GRAFT_REPLAY_MAPPING_URL=<es>/<index>: PUT the pinned

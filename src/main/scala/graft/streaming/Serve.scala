@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.GraftExtensions
+import graft.Session
 
 /** Launchable ingest job outside tests: file-drop source → decode/route
   * → SUCCESS/ERROR channels, optionally with the HTTP `_bulk` transport
@@ -30,24 +29,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 5,
       "usage: Serve <dropDir> <outDir> <checkpointDir> [<esBulkUrl> <index>]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store: the default HDFS-backed provider keeps every
-      // key in executor heap — at 100 TB/day the sessionize/dedup state
-      // (one entry per active stream / in-flight event id) OOMs the JVM;
-      // RocksDB spills to local disk and bounds heap. Changelog
-      // checkpointing uploads per-batch deltas instead of full snapshots,
-      // keeping checkpoint cost proportional to state CHANGE, not size.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    GraftExtensions.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv()
 
     // SPARK_GRAFT_DRAIN=1: process what's landed and exit (smoke runs /
     // cron-style catch-up); default is the reference's 5 s flush cadence

@@ -15,6 +15,11 @@ import scala.jdk.CollectionConverters._
   * `coalesce(1)` site must therefore declare its bound with a marker
   * comment, and the one corpus-cardinality artifact that was caught
   * (bbq_packed) is asserted to build with a parallel write.
+  *
+  * Two source-layout guards ride along: `src/main` builds a
+  * SparkSession only in `Session.scala` (one session policy for every
+  * entry point), and holds only the five mains the service and the
+  * driver run — diagnostic mains live in `src/test`.
   */
 class ArtifactPolicySpec extends SparkSpec {
 
@@ -38,6 +43,24 @@ class ArtifactPolicySpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"coalesce(1) without a declared cardinality bound (dim-bounded:/" +
         s"batch-bounded:/output-dump: marker): ${offenders.mkString(", ")}")
+  }
+
+  private def mainFilesContaining(needle: String): Set[String] =
+    walkScala("src/main/scala")
+      .filter(p => Files.readString(p).contains(needle))
+      .map(_.getFileName.toString).toSet
+
+  test("src/main builds a SparkSession only in the Session factory") {
+    val builders = mainFilesContaining("SparkSession.builder")
+    assert(builders == Set("Session.scala"),
+      s"SparkSession.builder outside Session.scala: ${builders - "Session.scala"}")
+  }
+
+  test("src/main holds only the driver, gate and deploy mains") {
+    val mains = mainFilesContaining("def main(")
+    assert(mains == Set("Bench.scala", "Verify.scala", "Liveness.scala",
+      "Serve.scala", "Replay.scala"),
+      s"mains in src/main: ${mains.toSeq.sorted.mkString(", ")}")
   }
 
   test("bbq packed index (corpus-cardinality artifact) builds with a parallel write") {

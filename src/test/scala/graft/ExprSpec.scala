@@ -126,7 +126,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("SQL registry exposes the round-5 functions with working semantics") {
-    GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT simhash_bits(split('a b c', ' ')) AS sh, " +
         "nfc_normalize('plain') AS nf, " +
@@ -193,7 +192,6 @@ class ExprSpec extends SparkSpec {
     assert(empty.head.isNullAt(0))
     // null ELEMENTS are skipped like the definitional min(md5) form
     // (md5(null) is null, min ignores it); all-null → null signature
-    GraftExtensions.install(spark)
     val withNulls = spark.sql(
       "SELECT minhash_sigs(array('a b c', CAST(NULL AS STRING)), 8) AS mh, " +
         "minhash_sigs(array('a b c'), 8) AS mh_clean, " +
@@ -264,7 +262,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("SQL registry exposes the r11 vector/PQ family") {
-    GraftExtensions.install(spark)
     val r = spark.sql(
       """SELECT
         |  quantize_vec(array(CAST(0.0015 AS FLOAT), CAST(-0.0015 AS FLOAT))) AS q,

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe for the r5 np_geoip_join regression: times the two
   * geoip twins at a chosen SF and dumps formatted plans. */
 object GeoipProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Session.fromEnv()
     val names = Seq("np_geoip_join", "np_geoip_bucketed")
     names.foreach { n =>
       println(s"===== $n plan =====")

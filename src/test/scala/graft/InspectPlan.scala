@@ -1,15 +1,8 @@
 package graft
 object InspectPlan {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
     for (name <- args) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       df.collect()

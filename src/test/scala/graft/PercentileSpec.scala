@@ -92,7 +92,6 @@ class PercentileSpec extends SparkSpec {
 
   test("grok_struct rejects non-foldable and null literal args with an analysis error") {
     import spark.implicits._
-    GraftExtensions.install(spark)
     val nonFoldable = intercept[AnalysisException] {
       Seq(("a-b", "(x)-(y)")).toDF("line", "rx")
         .selectExpr("grok_struct(line, rx, 'a', 'b')").collect()

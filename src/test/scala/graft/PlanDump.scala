@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r21 deliverable support: writes `.explain("formatted")` output for
   * declared queries to a directory (default plans/r21, suffix via
   * args), so before/after plan shapes are committed evidence next to
@@ -17,19 +15,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val suffix = args.headOption.getOrElse("before")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/root/repo/plans/r21")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val all = SparkEntry.queries
     val names = (if (args.length > 1) args.drop(1).toSeq else all.keys.toSeq).sorted

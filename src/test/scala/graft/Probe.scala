@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratchpad: probes the library surface the way a user would —
@@ -7,13 +6,9 @@ import org.apache.spark.sql.functions._
   * inputs (garbage gzip bytes, empty input, no-match grok lines). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    GraftExtensions.install(spark)
     // 1. SQL path: registered functions round-trip
     spark.sql("SELECT cast(gunzip(gzip(cast('hello graft' as binary))) as string) AS rt, " +
       "vec_cosine(array(1.0F,0.0F), array(1.0F,0.0F)) AS cos_same, " +

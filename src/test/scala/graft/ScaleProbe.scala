@@ -40,18 +40,7 @@ object ScaleProbe {
     val flagFactor = 2.0
     val curvFactor = 2.0
     val floorSec = 0.5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Session.fromEnv()
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 

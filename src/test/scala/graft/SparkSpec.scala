@@ -11,16 +11,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Built by the same factory as every entry point, so suites run under
+    * the deployed conf (RocksDB state store, codegen cache, graft SQL
+    * functions). A fixed 4 cores, not SPARK_GRAFT_CPUS: test results
+    * must not depend on the box. */
+  lazy val session: SparkSession = Session.local(4)
 }
