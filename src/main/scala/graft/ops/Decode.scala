@@ -51,6 +51,13 @@ object Decode {
     when(try_parse_json(c).isNotNull, c)
       .otherwise(to_json(struct(c.as("text"))))
 
+  /** Gzip magic sniff: true iff the bytes open with 0x1f 0x8b (RFC 1952
+    * §2.3.1), null for a null input. A binary comparison of the first two
+    * bytes — no hex/upper round-trip through strings, so no ICU case
+    * mapping per record. */
+  def isGzip(bin: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    substring(bin, 1, 2) === lit(Array[Byte](0x1f, 0x8b.toByte))
+
   private val jsonOrTextSql =
     "CASE WHEN json_valid(msg) THEN msg ELSE to_json({'text': msg}) END"
 
@@ -83,9 +90,9 @@ object Decode {
     "k2e_detect_gzip",
     (s, dir) => eventsPar(s, dir).select(
       col("event_id"),
-      (upper(hex(substring(
+      isGzip(
         when(col("user_id") % 2 === 0, gzip(col("props").cast("binary")))
-          .otherwise(col("props").cast("binary")), 1, 2))) === "1F8B").as("is_gzip")),
+          .otherwise(col("props").cast("binary"))).as("is_gzip")),
     Some("SELECT event_id, user_id % 2 = 0 AS is_gzip FROM events"),
     // the magic-byte sniff sees BOTH container branches
     liveness = Seq(

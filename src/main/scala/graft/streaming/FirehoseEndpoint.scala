@@ -45,6 +45,11 @@ import graft.Json
   * touches executors, so ingest rate is decoupled from processing rate
   * — the topology that survives 1000 executors, where the reference's
   * in-handler processing is bounded by one service instance.
+  *
+  * `onLanded` runs once per landed batch, after the atomic move and
+  * before the 200: Serve passes the ingest stream's
+  * `ArrivalClock.signal`, so the stream starts a trigger for the batch
+  * at once instead of waiting for its heartbeat (see `Pipeline.run`).
   */
 object FirehoseEndpoint {
   /** Default request-body cap. Firehose HTTP-endpoint delivery batches
@@ -77,7 +82,8 @@ object FirehoseEndpoint {
 final class FirehoseEndpoint(dropDir: String, port: Int = 0,
                              maxBodyBytes: Int = FirehoseEndpoint.defaultMaxBodyBytes,
                              extraMetrics: () => Map[String, Long] = () => Map.empty,
-                             accessLog: Boolean = false) {
+                             accessLog: Boolean = false,
+                             onLanded: () => Unit = () => ()) {
 
   private val mapper = new ObjectMapper()
   private val seq = new AtomicLong(0L)
@@ -278,6 +284,7 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
         catch { case _: UnsupportedOperationException => () }
         Files.move(staged, Paths.get(dropDir, name), StandardCopyOption.ATOMIC_MOVE)
         recordsLanded.addAndGet(records.size().toLong)
+        onLanded()
       } catch {
         // batch NOT accepted — 500 with the firehoseErrorBody shape so
         // Firehose redelivers (the reference's splitRecords-failure path,

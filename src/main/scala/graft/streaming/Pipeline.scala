@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ArrivalClock, StreamStart}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -12,15 +13,21 @@ import graft.ops.Decode
   *
   * The reference is a streaming HTTP ingester: Firehose POSTs batches
   * (reference main.go:248–365), records decode/explode into documents,
-  * and a bulk indexer flushes every 5 s with exponential-backoff retry on
+  * and a per-request bulk indexer with exponential-backoff retry on
   * HTTP 429/502/503/504 (reference main.go:399–451, RetryOnStatus at
-  * main.go:412, FlushInterval at main.go:436). Firehose itself redelivers
-  * whole batches on failure (at-least-once) and archives everything to S3
-  * under SUCCESS/ / ERROR/ prefixes
+  * main.go:412) is closed — every document flushed — before the
+  * handler answers 200 (main.go:347). Its 5 s FlushInterval
+  * (main.go:436) therefore never delays a request. Firehose itself
+  * redelivers whole batches on failure (at-least-once) and archives
+  * everything to S3 under SUCCESS/ / ERROR/ prefixes
   * (reference cloudformation-template.yaml:160–171).
   *
   * Spark-first re-expression: `readStream` micro-batches are the bulk
-  * indexer's flush buffer (Trigger.ProcessingTime(5s) = FlushInterval);
+  * indexer's flush buffer, and they are arrival-driven: the Firehose
+  * endpoint signals the stream's `ArrivalClock` when it lands a batch,
+  * which starts the next trigger at once, so batch size follows load.
+  * The 5 s `Trigger.ProcessingTime` is only the idle heartbeat, for
+  * spools filled by other writers (see `run`);
   * `foreachBatch` is the flush callback, and the retry/backoff envelope
   * stays where the reference has it, inside the bulk transport's POST
   * loop (HttpBulk); the SUCCESS/ERROR prefixes become two sink
@@ -76,7 +83,7 @@ object Pipeline {
       else withReq.withColumn("access_key", lit(""))
     withKey
       .withColumn("rawBody",
-        when(upper(hex(substring(bin, 1, 2))) === "1F8B", try_gunzip(bin))
+        when(Decode.isGzip(bin), try_gunzip(bin))
           .otherwise(bin).cast("string"))
       .withColumn("env", from_json(col("rawBody"), StructType.fromDDL(Decode.cwSchemaPruned)))
       .withColumn("err",
@@ -120,8 +127,11 @@ object Pipeline {
   /** One micro-batch flush: decode once, persist, then write each
     * channel from the persisted frame — the inflate + JSON parse run once
     * per record, not once per channel. Actions run in a fixed order:
-    * SUCCESS archive (probe + write), bulk POST, alert matches, then
-    * ERROR (probe + write). Each writer receives the batchId so it can
+    * bulk POST, SUCCESS archive (probe + write), alert matches, then
+    * ERROR (probe + write). The POST goes first so it waits for no
+    * archive work; the archive runs in its `finally`, so a batch whose
+    * sink fails for good still leaves its replay store before it fails.
+    * Each writer receives the batchId so it can
     * be idempotent under replay (see channelWriter); a writer that
     * throws fails the micro-batch, which re-runs from the checkpoint.
     * `enrich` runs on the documents channel before its writers — the
@@ -144,8 +154,7 @@ object Pipeline {
       val docs0 = enrich(flatten(d.filter(col("err").isNull)))
       val docs = if (multi) docs0.persist() else docs0
       try {
-        archive(docs, batchId)
-        bulk.foreach(_(docs, batchId))
+        try bulk.foreach(_(docs, batchId)) finally archive(docs, batchId)
         // in-stream alerting (the OpenSearch percolate/watcher role):
         // the registered queries match each micro-batch's documents
         // AFTER enrich — alerts see what the index sees (e.g.
@@ -203,7 +212,8 @@ object Pipeline {
     * skipping there would leave an earlier attempt's rows in place);
     * a fresh empty batch writes nothing, so a long-running stream does
     * not mint one near-empty parquet directory per trigger per channel
-    * (~17k/day at the 5 s cadence, mostly on ERROR). The emptiness
+    * (~17k/day from the 5 s heartbeat alone, mostly on ERROR; arrivals
+    * add up to one trigger per landed request on top). The emptiness
     * probe runs against sinkBatch's persisted decode, not a re-decode.
     * Readers of the channel directory see `batch` as a partition
     * column. */
@@ -257,8 +267,20 @@ object Pipeline {
   /** Start the ingest stream over a source of (event_id, batch_ms,
     * data) envelope rows (see SourceConfig): decode (per-record
     * encoding sniff) → route → SUCCESS/ + ERROR/ parquet channels
-    * (reference cloudformation-template.yaml:170–171), 5 s micro-batches
-    * (reference main.go:436), checkpointed for restart recovery.
+    * (reference cloudformation-template.yaml:170–171), checkpointed for
+    * restart recovery.
+    *
+    * Triggers are arrival-driven: the query runs on `clock`, and a writer
+    * that calls `clock.signal()` after landing data (Serve wires the
+    * FirehoseEndpoint to it) ends the wait between triggers, so a
+    * request is processed as soon as the running trigger ends, with
+    * everything else that landed meanwhile. `trigger` (default
+    * `ProcessingTime(5 s)`) is only the heartbeat for spools nothing
+    * signals. The wake is edge-triggered and the spool is never polled:
+    * a burst larger than the source's `maxFilesPerTrigger` with no later
+    * arrival drains its remainder at the heartbeat. With the default
+    * clock nothing signals and the heartbeat alone paces the stream;
+    * `AvailableNow` and `ProcessingTime(0)` never wait on the clock.
     *
     * `bulk = Some(target)` adds the HTTP `_bulk` transport: documents
     * also POST per partition to the target (HttpBulk), and per-item bulk
@@ -266,12 +288,12 @@ object Pipeline {
     * way — with a target it is the archive copy of every delivered
     * document (Firehose S3BackupMode AllData,
     * cloudformation-template.yaml:162–171), the replay store if the
-    * index is lost. The archive runs before the POST and is
-    * overwrite-idempotent, so even a permanently failing sink leaves a
-    * complete replay store, and a replayed batch re-archives the same
-    * `batch=<id>` path instead of duplicating. documents_indexed is
-    * counted once per delivered document: on the POST job with a
-    * target, on the archive write without one.
+    * index is lost. The archive runs after the POST, in its `finally`,
+    * and is overwrite-idempotent, so even a permanently failing sink
+    * leaves a complete replay store, and a replayed batch re-archives
+    * the same `batch=<id>` path instead of duplicating.
+    * documents_indexed is counted once per delivered document: on the
+    * POST job with a target, on the archive write without one.
     *
     * `alertQueries = Some(qs)` adds the in-stream percolation stage
     * with that registered rule set (qs: (query_id, query_string) rows —
@@ -287,23 +309,20 @@ object Pipeline {
           trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
           enrich: DataFrame => DataFrame = identity,
           metrics: Option[ServiceMetrics] = None,
-          alertQueries: Option[Seq[(Long, String)]] = None): StreamingQuery = {
+          alertQueries: Option[Seq[(Long, String)]] = None,
+          clock: ArrivalClock = new ArrivalClock): StreamingQuery = {
     val indexed = metrics.map(_.indexedMetric)
     val post = bulk.map(t => HttpBulk.bulkWriter(t.postUrl, t.index, s"$outDir/ERROR_ITEMS",
       flushBytes = t.flushBytes, baseBackoffMs = t.backoffMs,
       rejectionCounter = metrics.map(_.bulkItemRejections),
       observeDocsAs = indexed))
-    source.writeStream
-      .foreachBatch(sinkBatch(
-        channelWriter(s"$outDir/SUCCESS", if (bulk.isEmpty) indexed else None),
-        post,
-        channelWriter(s"$outDir/ERROR", metrics.map(_.deadLetterMetric)),
-        enrich, metrics,
-        alertQueries.map(qs =>
-          (channelWriter(s"$outDir/ALERTS", metrics.map(_.alertsMetric)), qs))) _)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    StreamStart.foreachBatch(source, checkpointDir, trigger, clock)(sinkBatch(
+      channelWriter(s"$outDir/SUCCESS", if (bulk.isEmpty) indexed else None),
+      post,
+      channelWriter(s"$outDir/ERROR", metrics.map(_.deadLetterMetric)),
+      enrich, metrics,
+      alertQueries.map(qs =>
+        (channelWriter(s"$outDir/ALERTS", metrics.map(_.alertsMetric)), qs))) _)
   }
 
   /** Event-time tumbling counts with a 10-minute watermark: events later

@@ -16,10 +16,13 @@ import scala.jdk.CollectionConverters._
   * comment, and the one corpus-cardinality artifact that was caught
   * (bbq_packed) is asserted to build with a parallel write.
   *
-  * Two source-layout guards ride along: `src/main` builds a
+  * Three source-layout guards ride along: `src/main` builds a
   * SparkSession only in `Session.scala` (one session policy for every
-  * entry point), and holds only the five mains the service and the
-  * driver run — diagnostic mains live in `src/test`.
+  * entry point), holds only the five mains the service and the driver
+  * run — diagnostic mains live in `src/test` — and touches Spark's
+  * private streaming internals (the query manager's `startQuery`, the
+  * foreachBatch sink, the trigger clock) only under `graftshim/`, so a
+  * Spark upgrade has one place to fix.
   */
 class ArtifactPolicySpec extends SparkSpec {
 
@@ -61,6 +64,17 @@ class ArtifactPolicySpec extends SparkSpec {
     assert(mains == Set("Bench.scala", "Verify.scala", "Liveness.scala",
       "Serve.scala", "Replay.scala"),
       s"mains in src/main: ${mains.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("Spark-private streaming internals appear only in the graftshim package") {
+    val shim = Paths.get("src/main/scala/org/apache/spark/sql/graftshim")
+    val offenders = for {
+      needle <- Seq("startQuery(", "ForeachBatchSink", "org.apache.spark.util.Clock")
+      p <- walkScala("src/main/scala").toSeq
+      if !p.startsWith(shim) && Files.readString(p).contains(needle)
+    } yield s"$p: $needle"
+    assert(offenders.isEmpty,
+      s"Spark streaming internals outside graftshim: ${offenders.mkString(", ")}")
   }
 
   test("bbq packed index (corpus-cardinality artifact) builds with a parallel write") {

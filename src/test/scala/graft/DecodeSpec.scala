@@ -26,6 +26,21 @@ class DecodeSpec extends SparkSpec {
     cases.foreach { case (in, want) => assert(out(in) == want, s"case <$in>") }
   }
 
+  test("isGzip sniffs the two magic bytes as binary") {
+    import spark.implicits._
+    val cases = Seq(
+      "gzip magic" -> graft.expr.GzipCodec.gzip("x".getBytes("UTF-8")),
+      "plain JSON" -> """{"a":1}""".getBytes("UTF-8"),
+      "1-byte payload" -> Array[Byte](0x1f),
+      "empty payload" -> Array.emptyByteArray,
+      "0x1f 0x00" -> Array[Byte](0x1f, 0x00, 0x08))
+    val got = cases.toDF("name", "bin")
+      .select(col("name"), Decode.isGzip(col("bin")))
+      .as[(String, Boolean)].collect().toMap
+    assert(got == Map("gzip magic" -> true, "plain JSON" -> false,
+      "1-byte payload" -> false, "empty payload" -> false, "0x1f 0x00" -> false))
+  }
+
   test("X2 explode cardinality: documents = sum of |logEvents| (2 per batch)") {
     val nEvents = Tables.events(spark, sfDir).count()
     val docs = Decode.pipeline(spark, sfDir, withGzip = false)

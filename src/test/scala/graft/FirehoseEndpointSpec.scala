@@ -310,6 +310,48 @@ class FirehoseEndpointSpec extends SparkSpec {
     } finally { ep.stop(); bulk.stop(0) }
   }
 
+  test("arrival wake: a landed batch reaches _bulk long before the 10-minute heartbeat") {
+    import java.net.InetSocketAddress
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import org.apache.spark.sql.graftshim.ArrivalClock
+    val bodies = new ConcurrentLinkedQueue[String]()
+    val bulk = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    bulk.createContext("/_bulk", (ex: HttpExchange) => {
+      bodies.add(new String(ex.getRequestBody.readAllBytes(), UTF_8))
+      val resp = """{"took":1,"errors":false,"items":[]}""".getBytes(UTF_8)
+      ex.sendResponseHeaders(200, resp.length)
+      ex.getResponseBody.write(resp)
+      ex.close()
+    })
+    bulk.start()
+    val bulkUrl = s"http://127.0.0.1:${bulk.getAddress.getPort}/_bulk"
+
+    val dropDir = tmp("fh-wake-drop")
+    // Serve's wiring: the endpoint signals the clock the stream waits on
+    val clock = new ArrivalClock
+    val ep = new FirehoseEndpoint(dropDir, onLanded = () => clock.signal())
+    val q = Pipeline.run(SourceConfig.fileDrop(dropDir).open(spark),
+      tmp("fh-wake-out"), tmp("fh-wake-ckpt"),
+      bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
+      trigger = Trigger.ProcessingTime("10 minutes"), clock = clock)
+    try {
+      // the startup trigger finds an empty spool; after it the stream
+      // waits for the next 10-minute grid line unless woken
+      val up = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (q.lastProgress == null && System.nanoTime() < up) Thread.sleep(20)
+      assert(q.lastProgress != null, "no startup progress event within 60 s")
+      val (status, _) = call(s"${ep.url}/firehose", "POST",
+        envelope("r", 1L, b64(cwBody("wk"))).getBytes(UTF_8), json)
+      assert(status == 200)
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      def delivered = Set("wk-1", "wk-2").forall(id =>
+        bodies.toArray.exists(_.toString.contains(s""""_id":"$id"""")))
+      while (!delivered && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(delivered, s"documents not at _bulk within 20 s: ${bodies.toArray.toSeq}")
+    } finally { q.stop(); ep.stop(); bulk.stop(0) }
+  }
+
   test("auth isolation e2e: two tenants' batches each index under their own key (main.go:422–424)") {
     import java.net.InetSocketAddress
     import java.util.concurrent.ConcurrentLinkedQueue

@@ -304,9 +304,10 @@ class HttpBulkSpec extends SparkSpec {
     try {
       val in = MemoryStream[(Long, Long, String)]
       in.addData((1L, 10L, b64))
+      val out = tmp("always429-out")
       val q = Pipeline.run(
         in.toDF().toDF("event_id", "batch_ms", "data"),
-        tmp("always429-out"), tmp("always429-ckpt"),
+        out, tmp("always429-ckpt"),
         bulk = Some(HttpBulk.Target(stub.url, "graft-docs", backoffMs = 1)),
         trigger = Trigger.AvailableNow())
       val failure = try intercept[Exception](q.processAllAvailable()) finally q.stop()
@@ -321,6 +322,11 @@ class HttpBulkSpec extends SparkSpec {
       assert(perBody.nonEmpty && perBody.forall(_ == 5),
         s"each body must see exactly maxAttempts = 5 POSTs, not 25: $perBody")
       assert(stub.bodies.isEmpty, "nothing may be accepted")
+      // the archive runs in the POST's finally: the failed batch still
+      // leaves every document in its replay store
+      val archived = spark.read.parquet(s"$out/SUCCESS/batch=0")
+        .select("event_ref").as[String].collect().toSeq
+      assert(archived == Seq("t1"), s"SUCCESS/batch=0 holds $archived")
     } finally stub.stop()
   }
 }
