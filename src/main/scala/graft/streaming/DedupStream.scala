@@ -194,8 +194,7 @@ object DedupStream {
     * attempt's partition if one exists (replay idempotence, the
     * channelWriter emptiness discipline). `observe` decorates ONLY the
     * non-empty write plan — attached after the emptiness probe, whose
-    * limit-1 action would otherwise harvest a partial count (the same
-    * ordering rule channelWriter documents). */
+    * limit-1 action would otherwise harvest a partial count. */
   private def writeStorePartition(df: DataFrame, bktCol: String, path: String,
                                   observe: DataFrame => DataFrame = identity): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -21,10 +21,11 @@ import graft.Json
   * retries layer on top for node loss. This module owns the retry
   * policy: it is the only layer that sees a transient status. Per-item
   * failures from the bulk response (the OnFailure callback,
-  * main.go:566–571) come back as rows and land idempotently under
-  * `errDir/batch=<id>` so replays overwrite rather than duplicate.
-  * Nothing collects to the driver; each executor talks to the endpoint
-  * directly, which is the only transport topology that scales to 1000
+  * main.go:566–571) are the only rows the POST job collects; they
+  * land idempotently under `errDir/batch=<id>`, only when there are
+  * some, so replays overwrite rather than duplicate. The documents are
+  * never collected: each executor talks to the endpoint directly,
+  * which is the only transport topology that scales to 1000
   * executors.
   *
   * Auth passthrough (reference main.go:321–324, 414: the
@@ -208,32 +209,30 @@ object HttpBulk {
       def next(): (String, Array[Byte]) = { fill(); ready.dequeue() }
     }
 
-  /** A channel writer that POSTs the documents frame to `url` as
-    * `_bulk` NDJSON and lands per-item rejections under
-    * `errDir/batch=<id>`. Transient statuses (429/502/503/504, reference
-    * main.go:412) retry with exponential backoff inside the task;
-    * non-transient HTTP errors and exhausted retries throw, failing the
-    * micro-batch for checkpoint replay — the reference's
-    * whole-batch-retry contract. `auth` is only the STATIC fallback for
-    * records that landed with no access_key of their own — a keyed
-    * record posts under ITS key (reference main.go:414, 422–424 —
-    * per-request client, per-request credential), and a keyless record
-    * never inherits another tenant's captured key. `observeDocsAs` names
-    * an observe() node over the rendered lines (one per document), so
-    * documents_indexed rides the POST job itself — see ServiceMetrics. */
+  /** A writer that POSTs the documents frame to `url` as `_bulk`
+    * NDJSON and returns the number of per-item rejections. The POST is
+    * one `collect` job: each partition posts its bodies and returns only
+    * its rejected items, which are rare. They land under
+    * `errDir/batch=<id>` through Pipeline.channelWriter, so the
+    * directory is written only when some item was rejected or an
+    * earlier attempt of the batch left one there (a replay overwrites
+    * it). Transient statuses (429/502/503/504, reference main.go:412)
+    * retry with exponential backoff inside the task; non-transient HTTP
+    * errors and exhausted retries throw, failing the micro-batch for
+    * checkpoint replay — the reference's whole-batch-retry contract.
+    * `auth` is only the STATIC fallback for records that landed with no
+    * access_key of their own — a keyed record posts under ITS key
+    * (reference main.go:414, 422–424 — per-request client, per-request
+    * credential), and a keyless record never inherits another tenant's
+    * captured key. */
   def bulkWriter(url: String, index: String, errDir: String,
                  auth: Option[String] = None,
                  flushBytes: Int = defaultFlushBytes,
-                 baseBackoffMs: Long = 50,
-                 rejectionCounter: Option[org.apache.spark.util.LongAccumulator] = None,
-                 observeDocsAs: Option[String] = None): (DataFrame, Long) => Unit =
+                 baseBackoffMs: Long = 50): (DataFrame, Long) => Long =
     (docs, batchId) => {
       val spark = docs.sparkSession
       import spark.implicits._
-      val keyed = Pipeline.toBulkNdjsonKeyed(docs, index)
-      val failed = observeDocsAs
-        .fold(keyed)(n => keyed.observe(n, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows")))
+      val failed = Pipeline.toBulkNdjsonKeyed(docs, index)
         .as[(String, String)]
         .mapPartitions { rows =>
           chunksByKey(rows, flushBytes).flatMap { case (key, body) =>
@@ -244,15 +243,14 @@ object HttpBulk {
               if (status >= 400) throw new java.io.IOException(s"bulk POST rejected: HTTP $status")
               rb
             }
-            val failures = itemFailures(resp).toSeq
-            // per-item rejection counter (the reference's OnFailure
-            // prometheus hook, main.go:566–571) — executor-side, so an
-            // accumulator, not a driver AtomicLong
-            rejectionCounter.foreach(_.add(failures.size.toLong))
-            failures
+            // per-item failures (the reference's OnFailure callback,
+            // main.go:566–571)
+            itemFailures(resp).toSeq
           }
         }
-        .toDF("item_id", "status", "err")
-      failed.write.mode("overwrite").parquet(s"$errDir/batch=$batchId")
+        .collect()
+      Pipeline.channelWriter(errDir)(
+        failed.toSeq.toDF("item_id", "status", "err"), batchId, failed.nonEmpty)
+      failed.length.toLong
     }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.{ArrivalClock, StreamStart}
+import org.apache.spark.sql.graftshim.{ArrivalClock, Bridge, StreamStart}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -37,6 +37,11 @@ import graft.ops.Decode
   * implies. The decode chain itself is `route`, unchanged between batch
   * and streaming (the `k2e_pipeline_*` keys run it through
   * `Decode.pipeline`) — the point of keeping it declarative.
+  *
+  * A live trigger runs the bulk POST, the SUCCESS archive and, only for
+  * a batch with dead letters, the ERROR write. One observation on the
+  * persisted decode counts documents and dead letters while the first
+  * of them runs, and those counts decide the later writes (sinkBatch).
   *
   * At 100 TB/day posture: the only stateful operators (windowed agg,
   * dedup) are watermark-bounded so state stores stay finite; everything
@@ -124,27 +129,63 @@ object Pipeline {
     (flatten(d.filter(col("err").isNull)), deadLetter(d.filter(col("err").isNotNull)))
   }
 
+  /** Name of the observation sinkBatch attaches to its persisted decode:
+    * row(documents, dead_letters). */
+  private val channelCounts = "graft_channel_counts"
+
   /** One micro-batch flush: decode once, persist, then write each
     * channel from the persisted frame — the inflate + JSON parse run once
-    * per record, not once per channel. Actions run in a fixed order:
-    * bulk POST, SUCCESS archive (probe + write), alert matches, then
-    * ERROR (probe + write). The POST goes first so it waits for no
-    * archive work; the archive runs in its `finally`, so a batch whose
-    * sink fails for good still leaves its replay store before it fails.
-    * Each writer receives the batchId so it can
-    * be idempotent under replay (see channelWriter); a writer that
-    * throws fails the micro-batch, which re-runs from the checkpoint.
-    * `enrich` runs on the documents channel before its writers — the
-    * in-engine stand-in for the ES-side ingest pipeline the reference
-    * triggers per request (main.go:437; see IngestPipeline). */
-  private def sinkBatch(archive: (DataFrame, Long) => Unit,
-                        bulk: Option[(DataFrame, Long) => Unit],
-                        writeErr: (DataFrame, Long) => Unit,
+    * per record, not once per channel. The persisted decode carries one
+    * observation: the documents its routable records explode into (the
+    * sum of their logEvents sizes, which is the row count of `flatten`)
+    * and its dead-letter records. The first action fills it, and it is
+    * read straight from the cached plan (`Bridge.cachedObservation`): no
+    * extra job, and nothing waits on the listener bus.
+    *
+    * Actions run in a fixed order: the bulk POST, the SUCCESS archive,
+    * alert matches, then ERROR, only when needed. The POST goes first so
+    * it waits for no archive work, and it is the first full action, so
+    * the archive knows the counts. Without a target the archive is the
+    * first action. Each count decides its channel's write
+    * (channelWriter's `hasRows`):
+    *  - SUCCESS: documents > 0. When the count is unknown (no target,
+    *    or a POST that failed) the archive always writes. It runs in the
+    *    POST's `finally`, so a batch whose sink fails for good still
+    *    leaves its replay store before it fails, and it never waits for
+    *    the counts;
+    *  - ERROR: dead letters > 0;
+    *  - ALERTS: a probe of the matches (their count is only known to
+    *    their own write).
+    * A channel whose `batch=<id>` already exists is rewritten either way
+    * (the stale-replay rule). The counts also feed documents_indexed
+    * and documents_dead_lettered, once per batch whose writes all
+    * succeeded. `enrich` is a per-document stage, so documents are
+    * what the POST and the archive receive.
+    *
+    * Each writer receives the batchId so it can be idempotent under
+    * replay (see channelWriter); a writer that throws fails the
+    * micro-batch, which re-runs from the checkpoint. `enrich` runs on
+    * the documents channel before its writers — the in-engine stand-in
+    * for the ES-side ingest pipeline the reference triggers per request
+    * (main.go:437; see IngestPipeline). */
+  private def sinkBatch(archive: (DataFrame, Long, Boolean) => Unit,
+                        bulk: Option[(DataFrame, Long) => Long],
+                        writeErr: (DataFrame, Long, Boolean) => Unit,
                         enrich: DataFrame => DataFrame,
                         metrics: Option[ServiceMetrics],
-                        alerts: Option[((DataFrame, Long) => Unit, Seq[(Long, String)])])(
+                        alerts: Option[((DataFrame, Long, Boolean) => Unit, Seq[(Long, String)])])(
                         batch: Dataset[Row], batchId: Long): Unit = {
-    val d = decoded(batch.toDF()).persist()
+    // `batch` runs on the stream's own session. Its queries have no
+    // shuffle for adaptive execution to tune, and under it every
+    // persisted frame a query scans first becomes a job of its own (a
+    // table-cache query stage); without it the POST builds both caches
+    // inside its own job
+    batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+    val d = decoded(batch.toDF())
+      .observe(channelCounts,
+        coalesce(sum(when(col("err").isNull, size(col("env.logEvents")))), lit(0L)).as("documents"),
+        count_if(col("err").isNotNull).as("dead_letters"))
+      .persist()
     try {
       // docs has a second consumer beyond the archive whenever a bulk
       // target or the alert stage is on — persist so the enrich chain
@@ -153,8 +194,14 @@ object Pipeline {
       val multi = bulk.isDefined || alerts.isDefined
       val docs0 = enrich(flatten(d.filter(col("err").isNull)))
       val docs = if (multi) docs0.persist() else docs0
+      // (documents, dead letters); None until an action has scanned
+      // every partition of d with success
+      def counts(): Option[(Long, Long)] =
+        Bridge.cachedObservation(d, channelCounts).map(r => (r.getLong(0), r.getLong(1)))
+      var rejected = 0L
       try {
-        try bulk.foreach(_(docs, batchId)) finally archive(docs, batchId)
+        try bulk.foreach(post => rejected = post(docs, batchId))
+        finally archive(docs, batchId, counts().forall(_._1 > 0))
         // in-stream alerting (the OpenSearch percolate/watcher role):
         // the registered queries match each micro-batch's documents
         // AFTER enrich — alerts see what the index sees (e.g.
@@ -191,15 +238,19 @@ object Pipeline {
               regexp_replace(col("message"), "[{}\\[\\]\",:]+", " ")).as("text")),
             queries, keywordFields = Map.empty)
             .withColumnRenamed("rule_id", "query_id")
-          w(matches, batchId)
+          w(matches, batchId, !matches.isEmpty)
         }
       } finally if (multi) docs.unpersist()
-      writeErr(deadLetter(d.filter(col("err").isNotNull)), batchId)
-      // channel totals ride the writes themselves: the writers attach
-      // observe() nodes (ServiceMetrics harvests them on action success)
-      // so a flush costs zero extra count() jobs and the counted frame
-      // is exactly the written one
-      metrics.foreach(_.batchesTotal.incrementAndGet())
+      val seen = counts()
+      writeErr(deadLetter(d.filter(col("err").isNotNull)), batchId, seen.forall(_._2 > 0))
+      metrics.foreach { m =>
+        m.batchesTotal.incrementAndGet()
+        seen.foreach { case (n, dead) =>
+          m.documentsIndexed.addAndGet(n)
+          m.documentsDeadLettered.addAndGet(dead)
+        }
+        m.bulkItemRejections.addAndGet(rejected)
+      }
     } finally d.unpersist()
   }
 
@@ -207,28 +258,28 @@ object Pipeline {
     * `batch=<id>` subdirectory with overwrite mode, so a replayed
     * batchId (checkpoint recovery under the at-least-once contract)
     * rewrites the same path instead of appending duplicates — plain
-    * append would double rows on every replay. An EMPTY frame writes
+    * append would double rows on every replay. `hasRows` is the
+    * caller's knowledge of the frame (sinkBatch reads it from its
+    * channel counts, so no probe job runs): a frame without rows writes
     * only when `batch=<id>` already exists (the stale-replay case —
-    * skipping there would leave an earlier attempt's rows in place);
-    * a fresh empty batch writes nothing, so a long-running stream does
+    * skipping there would leave an earlier attempt's rows in place); a
+    * fresh empty batch writes nothing, so a long-running stream does
     * not mint one near-empty parquet directory per trigger per channel
-    * (~17k/day from the 5 s heartbeat alone, mostly on ERROR; arrivals
-    * add up to one trigger per landed request on top). The emptiness
-    * probe runs against sinkBatch's persisted decode, not a re-decode.
+    * (up to one trigger per landed request, mostly empty on ERROR).
     * Readers of the channel directory see `batch` as a partition
-    * column. */
-  /** `observeAs`: name an observe() node in the write plan so the row
+    * column.
+    *
+    * `observeAs`: name an observe() node in the write plan so the row
     * count rides the write action itself (harvested by ServiceMetrics'
-    * listener) — attached AFTER the emptiness probe, whose limit-1
-    * action must not feed the counter. */
-  def channelWriter(dir: String, observeAs: Option[String] = None): (DataFrame, Long) => Unit =
-    (df0, batchId) => {
+    * listener; the ALERTS channel). */
+  def channelWriter(dir: String, observeAs: Option[String] = None): (DataFrame, Long, Boolean) => Unit =
+    (df0, batchId, hasRows) => {
       // the access key is transport auth, not payload — a credential
       // must never land in the archived parquet channels
       val df = df0.drop("access_key")
       val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$batchId")
       val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(path) || !df.isEmpty)
+      if (hasRows || fs.exists(path))
         observeAs.fold(df)(n => df.observe(n, count(lit(1)).as("rows")))
           .write.mode("overwrite").parquet(path.toString)
     }
@@ -284,16 +335,18 @@ object Pipeline {
     *
     * `bulk = Some(target)` adds the HTTP `_bulk` transport: documents
     * also POST per partition to the target (HttpBulk), and per-item bulk
-    * rejections land in `outDir/ERROR_ITEMS`. SUCCESS/ is written either
-    * way — with a target it is the archive copy of every delivered
-    * document (Firehose S3BackupMode AllData,
+    * rejections, when there are any, land in `outDir/ERROR_ITEMS`.
+    * SUCCESS/ is written either way — with a target it is the archive
+    * copy of every delivered document (Firehose S3BackupMode AllData,
     * cloudformation-template.yaml:162–171), the replay store if the
     * index is lost. The archive runs after the POST, in its `finally`,
     * and is overwrite-idempotent, so even a permanently failing sink
     * leaves a complete replay store, and a replayed batch re-archives
-    * the same `batch=<id>` path instead of duplicating.
-    * documents_indexed is counted once per delivered document: on the
-    * POST job with a target, on the archive write without one.
+    * the same `batch=<id>` path instead of duplicating. A live trigger
+    * runs the POST, the archive and, only for a batch with dead
+    * letters, the ERROR write (see sinkBatch); documents_indexed and
+    * documents_dead_lettered come from the channel counts the first of
+    * them observes.
     *
     * `alertQueries = Some(qs)` adds the in-stream percolation stage
     * with that registered rule set (qs: (query_id, query_string) rows —
@@ -311,15 +364,12 @@ object Pipeline {
           metrics: Option[ServiceMetrics] = None,
           alertQueries: Option[Seq[(Long, String)]] = None,
           clock: ArrivalClock = new ArrivalClock): StreamingQuery = {
-    val indexed = metrics.map(_.indexedMetric)
     val post = bulk.map(t => HttpBulk.bulkWriter(t.postUrl, t.index, s"$outDir/ERROR_ITEMS",
-      flushBytes = t.flushBytes, baseBackoffMs = t.backoffMs,
-      rejectionCounter = metrics.map(_.bulkItemRejections),
-      observeDocsAs = indexed))
+      flushBytes = t.flushBytes, baseBackoffMs = t.backoffMs))
     StreamStart.foreachBatch(source, checkpointDir, trigger, clock)(sinkBatch(
-      channelWriter(s"$outDir/SUCCESS", if (bulk.isEmpty) indexed else None),
+      channelWriter(s"$outDir/SUCCESS"),
       post,
-      channelWriter(s"$outDir/ERROR", metrics.map(_.deadLetterMetric)),
+      channelWriter(s"$outDir/ERROR"),
       enrich, metrics,
       alertQueries.map(qs =>
         (channelWriter(s"$outDir/ALERTS", metrics.map(_.alertsMetric)), qs))) _)

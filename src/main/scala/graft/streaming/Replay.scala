@@ -14,11 +14,11 @@ import graft.Session
   * loop: the archive read lists every `batch=<id>` partition and every
   * partition POSTs concurrently through the same HttpBulk transport
   * the live stream uses (per-partition chunked `_bulk` bodies, retry
-  * with backoff on 429/502/503/504, per-item rejections to
-  * `errDir/batch=0`). Replay is idempotent at the index because `_id`
-  * is the archived document's `event_ref` — re-delivering an already
-  * indexed document overwrites it in place, the same contract the live
-  * stream gets from Firehose redelivery.
+  * with backoff on 429/502/503/504, per-item rejections, when there
+  * are any, to `errDir/batch=0`). Replay is idempotent at the index
+  * because `_id` is the archived document's `event_ref` — re-delivering
+  * an already indexed document overwrites it in place, the same
+  * contract the live stream gets from Firehose redelivery.
   *
   * The archived `batch` partition column is carried for lineage but
   * DROPPED from the rendered documents — it names the delivery

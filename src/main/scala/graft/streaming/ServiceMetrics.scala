@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.util.LongAccumulator
 
 /** Service observability counters (reference main.go:216–217 mounts
   * ginprom on `GET /metrics`; main.go:546–584's bulk callbacks feed the
@@ -13,16 +12,17 @@ import org.apache.spark.util.LongAccumulator
   * deploy/manifest.yaml:132–153).
   *
   * Counting rides the work that already runs — never an extra job:
-  *  - channel totals come from `Dataset.observe` nodes the writers put
-  *    in their OWN write plans (CollectMetrics — codegen-friendly,
-  *    computed during the write action itself), harvested here by a
-  *    QueryExecutionListener. The counted frame is therefore exactly
-  *    the frame written (post-enrich, post-explode), and a micro-batch
-  *    costs zero additional `count()` jobs.
-  *  - a Spark `LongAccumulator` for per-item bulk rejections, which only
-  *    the executor-side POST sees (HttpBulk's OnFailure-equivalent,
-  *    reference main.go:566–571).
-  * Both kinds can over-count under task/batch replays — the standard
+  *  - the ingest channels (documents_indexed, documents_dead_lettered)
+  *    and bulk_item_rejections are added by Pipeline's sinkBatch once a
+  *    batch's writes have all succeeded. The channel totals are the
+  *    observation on its persisted decode, filled by the batch's first
+  *    action and read from the cached plan; the rejections are the
+  *    rows the bulk POST job returns;
+  *  - the ALERTS and DedupStream totals come from `Dataset.observe`
+  *    nodes those writers put in their OWN write plans (CollectMetrics —
+  *    codegen-friendly, computed during the write action itself),
+  *    harvested here by a QueryExecutionListener.
+  * A batch that replays after it succeeded counts twice — the standard
   * Spark metrics trade, fine for monitoring, never used for data.
   *
   * Snapshot as JSON via `toJson` — FirehoseEndpoint serves it on
@@ -35,12 +35,6 @@ final class ServiceMetrics(spark: SparkSession) {
     * harvest each other's observe() nodes — names are matched globally
     * by the listener. */
   private val id = java.util.UUID.randomUUID().toString.take(8)
-
-  /** Observation name the delivery-channel writer attaches. */
-  val indexedMetric = s"graft_documents_indexed_$id"
-
-  /** Observation name the dead-letter-channel writer attaches. */
-  val deadLetterMetric = s"graft_documents_dead_lettered_$id"
 
   /** Observation name the alerting stage's writer attaches to the
     * percolation-matches write. */
@@ -69,7 +63,7 @@ final class ServiceMetrics(spark: SparkSession) {
   /** DedupStream: signature rows appended to the band store. */
   val dedupStoreRows = new AtomicLong(0L)
 
-  /** Documents written to the delivery channel (post-enrich rows). */
+  /** Documents delivered (POSTed with a target, archived to SUCCESS/). */
   val documentsIndexed = new AtomicLong(0L)
 
   /** Records dead-lettered to ERROR/ (undecodable / empty envelopes). */
@@ -79,8 +73,7 @@ final class ServiceMetrics(spark: SparkSession) {
   val alertsMatched = new AtomicLong(0L)
 
   /** Per-item `_bulk` rejections (status ≥ 300 in the bulk response). */
-  val bulkItemRejections: LongAccumulator =
-    spark.sparkContext.longAccumulator("graft.bulk_item_rejections")
+  val bulkItemRejections = new AtomicLong(0L)
 
   // Harvest the writers' observe() metrics. onSuccess only: a failed
   // write fails its micro-batch, which re-runs under checkpoint replay
@@ -89,10 +82,6 @@ final class ServiceMetrics(spark: SparkSession) {
   // event on the shared session for the process lifetime.
   private val listener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      qe.observedMetrics.get(indexedMetric)
-        .foreach(r => documentsIndexed.addAndGet(r.getLong(0)))
-      qe.observedMetrics.get(deadLetterMetric)
-        .foreach(r => documentsDeadLettered.addAndGet(r.getLong(0)))
       qe.observedMetrics.get(alertsMetric)
         .foreach(r => alertsMatched.addAndGet(r.getLong(0)))
       // null-guard every field: aggregates over an empty frame observe
@@ -122,7 +111,7 @@ final class ServiceMetrics(spark: SparkSession) {
       "documents_indexed" -> documentsIndexed.get(),
       "documents_dead_lettered" -> documentsDeadLettered.get(),
       "alerts_matched" -> alertsMatched.get(),
-      "bulk_item_rejections" -> bulkItemRejections.value,
+      "bulk_item_rejections" -> bulkItemRejections.get(),
       "dedup_batches" -> dedupBatches.get(),
       "dedup_uniques" -> dedupUniques.get(),
       "dedup_dups" -> dedupDups.get(),

@@ -36,6 +36,22 @@ object Bridge {
                        timeoutMs: Long = 2000): Boolean =
     try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** The row of the `observe(name, …)` node inside the plan `df` is
+    * persisted under, read straight from that cached plan's
+    * accumulators: no job and no listener, so it never waits.
+    * `CollectMetricsExec.collect` reads the same node for every action
+    * that scans the cache. None unless `df` is persisted, carries the
+    * node, and an action has materialized every partition of the cache
+    * (before that the accumulators hold partial or zero counts). */
+  def cachedObservation(df: org.apache.spark.sql.DataFrame,
+                        name: String): Option[org.apache.spark.sql.Row] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .flatMap(b => org.apache.spark.sql.execution.CollectMetricsExec.collect(b.cachedPlan).get(name))
+  }
 }
 
 /** ES|QL division: integer ÷ integer is INTEGER division truncated

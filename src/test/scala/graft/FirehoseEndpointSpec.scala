@@ -411,15 +411,15 @@ class FirehoseEndpointSpec extends SparkSpec {
     import java.net.InetSocketAddress
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     import graft.streaming.ServiceMetrics
-    // _bulk stub rejecting one item per request (exercises the
-    // rejection counter alongside the channel totals)
+    // _bulk stub rejecting the second event of the "m*" records
+    // (exercises the rejection counter alongside the channel totals)
     val bulk = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     bulk.createContext("/_bulk", (ex: HttpExchange) => {
       val ids = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         .split("\n").grouped(2).map(_.head)
         .map(a => """"_id":"([^"]+)"""".r.findFirstMatchIn(a).get.group(1)).toSeq
       val items = ids.map { id =>
-        if (id.endsWith("-2"))
+        if (id.startsWith("m") && id.endsWith("-2"))
           s"""{"index":{"_id":"$id","status":400,"error":{"reason":"rejected"}}}"""
         else s"""{"index":{"_id":"$id","status":201}}"""
       }.mkString(",")
@@ -434,30 +434,49 @@ class FirehoseEndpointSpec extends SparkSpec {
     val dropDir = tmp("fh-met-drop")
     val metrics = new ServiceMetrics(spark)
     val ep = new FirehoseEndpoint(dropDir, extraMetrics = () => metrics.snapshot)
-    // channel totals must ride the writes (observe + listener), never
-    // separate count() jobs per trigger — record every action name the
-    // session runs while the stream drains
-    val actionNames = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
+    // channel totals must ride the writes, never separate count() or
+    // isEmpty jobs per trigger — record every action (name, output
+    // path) the session runs while the stream drains
+    val actions = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(String, String)]())
     val recorder = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = actionNames.add(funcName)
+                             durationNs: Long): Unit =
+        actions.add((funcName, qe.logical.collectFirst {
+          case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+            c.outputPath.toString
+        }.getOrElse("")))
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
+    // and every Spark job: each action must be exactly one job (no
+    // adaptive table-cache stage materializing a persisted frame first)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobCounter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // earlier suites' action events must not reach the recorders
+    org.apache.spark.sql.graftshim.Bridge.flushListenerBus(spark)
     spark.listenerManager.register(recorder)
+    spark.sparkContext.addSparkListener(jobCounter)
+    val out = tmp("fh-met-out")
     try {
-      // one good batch (2 records → 4 docs, two of which the stub
-      // rejects per-item), one garbage record, one rejected request
+      // one good request (2 records → 4 docs, two of which the stub
+      // rejects per-item, plus one garbage record), one rejected
+      // request, and one clean request (2 docs, nothing rejected) —
+      // one spool file per batch
       val (s1, _) = call(s"${ep.url}/firehose", "POST",
         envelope("r1", 1L, b64(cwBody("ma")), b64(cwBody("mb")), b64("garbage")).getBytes(UTF_8), json)
       val (s2, _) = call(s"${ep.url}/firehose", "POST", "{oops".getBytes(UTF_8), json)
-      assert(s1 == 200 && s2 == 400)
+      val (s3, _) = call(s"${ep.url}/firehose", "POST",
+        envelope("r3", 3L, b64(cwBody("ok"))).getBytes(UTF_8), json)
+      assert(s1 == 200 && s2 == 400 && s3 == 200)
       val q = Pipeline.run(
-        SourceConfig.fileDrop(dropDir).open(spark),
-        tmp("fh-met-out"), tmp("fh-met-ckpt"),
+        SourceConfig.fileDrop(dropDir, maxFilesPerTrigger = 1).open(spark),
+        out, tmp("fh-met-ckpt"),
         bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow(), metrics = Some(metrics))
       try q.processAllAvailable() finally q.stop()
@@ -469,11 +488,11 @@ class FirehoseEndpointSpec extends SparkSpec {
       assert(ms == 200, s"GET /metrics must answer, got $ms")
       val counts = body.stripPrefix("{").stripSuffix("}").split(",")
         .map(_.split(":")).map(a => a(0).replace("\"", "") -> a(1).toLong).toMap
-      assert(counts("requests_total") == 2L, s"got $counts")
+      assert(counts("requests_total") == 3L, s"got $counts")
       assert(counts("rejected_requests") == 1L, s"got $counts")
-      assert(counts("records_landed") == 3L, s"got $counts")
-      assert(counts("batches_total") >= 1L, s"got $counts")
-      assert(counts("documents_indexed") == 4L, s"got $counts")
+      assert(counts("records_landed") == 4L, s"got $counts")
+      assert(counts("batches_total") == 2L, s"got $counts")
+      assert(counts("documents_indexed") == 6L, s"got $counts")
       assert(counts("documents_dead_lettered") == 1L, s"got $counts")
       assert(counts("bulk_item_rejections") == 2L, s"got $counts")
 
@@ -492,19 +511,43 @@ class FirehoseEndpointSpec extends SparkSpec {
         assert(n.startsWith("graft_") && n.endsWith("_total"), s"bad metric name $n")
         assert(promLines.contains(s"# TYPE $n counter"), s"missing TYPE for $n")
       }
-      assert(samples("graft_requests_total") == 2L, s"got $samples")
-      assert(samples("graft_documents_indexed_total") == 4L, s"got $samples")
+      assert(samples("graft_requests_total") == 3L, s"got $samples")
+      assert(samples("graft_documents_indexed_total") == 6L, s"got $samples")
       assert(samples("graft_bulk_item_rejections_total") == 2L, s"got $samples")
       // the /metrics.json alias answers JSON without the Accept header
       val (js, jbody) = call(s"${ep.url}/metrics.json", "GET")
-      assert(js == 200 && jbody.startsWith("{") && jbody.contains("\"requests_total\":2"))
+      assert(js == 200 && jbody.startsWith("{") && jbody.contains("\"requests_total\":3"))
 
-      // and none of those numbers came from an extra count() job
-      val counted = actionNames.toArray(Array.empty[String]).filter(_ == "count")
-      assert(counted.isEmpty, s"metrics must not run count() jobs, saw: $counted")
+      // none of those numbers came from an extra count() job, and no
+      // channel probed its emptiness: per batch, one POST (the collect
+      // of the rejected items) and one SUCCESS write; ERROR only for
+      // the batch with a dead letter, ERROR_ITEMS only for the batch
+      // whose items the stub rejected
+      org.apache.spark.sql.graftshim.Bridge.flushListenerBus(spark)
+      val seen = actions.toArray(Array.empty[(String, String)]).toSeq
+      val funcs = seen.map(_._1)
+      assert(!funcs.contains("count") && !funcs.contains("isEmpty"),
+        s"no count() or isEmpty probe may run, saw: $seen")
+      def batchesIn(channel: String): Seq[String] =
+        seen.map(_._2).filter(_.contains(s"/$channel/batch="))
+          .map(_.split("/batch=").last)
+      assert(funcs.count(_ == "collect") == 2, s"one POST per batch, saw: $seen")
+      assert(batchesIn("SUCCESS").sorted == Seq("0", "1"), s"one SUCCESS write per batch, saw: $seen")
+      val dirty = batchesIn("ERROR")
+      assert(dirty.size == 1, s"one ERROR write, for the batch with a dead letter, saw: $seen")
+      assert(batchesIn("ERROR_ITEMS") == dirty,
+        s"one ERROR_ITEMS write, for the batch the stub rejected items of, saw: $seen")
+      assert(seen.size == 6, s"2 POSTs + 2 archives + 1 ERROR + 1 ERROR_ITEMS, saw: $seen")
+      assert(jobs.get == seen.size, s"${jobs.get} Spark jobs for ${seen.size} actions: $seen")
+      // the dirty batch is the one holding request r1's documents
+      assert(spark.read.parquet(s"$out/SUCCESS/batch=${dirty.head}")
+        .select("event_ref").collect().map(_.getString(0)).sorted.toSeq
+        == Seq("ma-1", "ma-2", "mb-1", "mb-2"))
+      assert(spark.read.parquet(s"$out/ERROR_ITEMS/batch=${dirty.head}").count() == 2)
     } finally {
       ep.stop(); bulk.stop(0)
       spark.listenerManager.unregister(recorder)
+      spark.sparkContext.removeSparkListener(jobCounter)
       metrics.close() // don't leak the harvest listener onto later tests
     }
   }
@@ -548,12 +591,12 @@ class FirehoseEndpointSpec extends SparkSpec {
     val dir = tmp("fh-emptych")
     val write = Pipeline.channelWriter(dir)
     val empty = Seq.empty[(Long, String)].toDF("event_id", "v")
-    write(empty, 0L)
+    write(empty, 0L, false)
     assert(!Files.exists(java.nio.file.Paths.get(dir, "batch=0")),
       "a fresh empty batch must not mint a directory")
     val docs = Seq((1L, "a")).toDF("event_id", "v")
-    write(docs, 1L)
-    write(empty, 1L) // stale-replay: the replayed batch is now empty
+    write(docs, 1L, true)
+    write(empty, 1L, false) // stale-replay: the replayed batch is now empty
     assert(spark.read.parquet(s"$dir/batch=1").count() == 0,
       "an empty replay must overwrite the stale non-empty attempt")
   }

@@ -6,6 +6,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -16,7 +18,11 @@ import graft.streaming.{HttpBulk, Pipeline}
   * partition POST bodies, flushBytes chunking, 429 retry/backoff,
   * per-item failure routing, auth passthrough, and the full streaming
   * topology end-to-end (reference main.go:399–451, 546–584). */
-class HttpBulkSpec extends SparkSpec {
+class HttpBulkSpec extends SparkSpec with TimeLimits {
+
+  /** `failAfter` interrupts the test thread, so a wedged batch fails
+    * the test instead of stalling the suite. */
+  private implicit val signaler: Signaler = ThreadSignaler
 
   /** Loopback `_bulk` stub: answers 429 to the first `fail429First`
     * requests, then 200 with a per-item response — status 400 +
@@ -94,15 +100,39 @@ class HttpBulkSpec extends SparkSpec {
     val stub = new BulkStub(fail429First = 1)
     try {
       val errDir = tmp("bulk-err")
-      HttpBulk.bulkWriter(stub.url, "graft-docs", errDir, baseBackoffMs = 1)(
+      val rejected = HttpBulk.bulkWriter(stub.url, "graft-docs", errDir, baseBackoffMs = 1)(
         docsFrame("a1", "a2", "a3", "a4").repartition(2), 0L)
+      assert(rejected == 0L)
       assert(stub.hits.get == 3, "2 partitions + 1 retried 429")
       assert(stub.bodies.size == 2, "exactly one accepted body per partition")
       val posted = stub.bodies.toArray.mkString("\n")
       Seq("a1", "a2", "a3", "a4").foreach(id =>
         assert(posted.contains(s""""_id":"$id""""), s"$id must be posted"))
-      assert(spark.read.parquet(s"$errDir/batch=0").count() == 0, "no item failures")
+      // no item failures: the batch mints no ERROR_ITEMS directory
+      assert(!Files.exists(java.nio.file.Paths.get(errDir, "batch=0")),
+        "a batch without rejections must not write errDir/batch=0")
     } finally stub.stop()
+  }
+
+  test("a stale ERROR_ITEMS batch with rows is overwritten by a replay without rejections") {
+    failAfter(Span(60, Seconds)) {
+      val errDir = tmp("bulk-stale-items")
+      val rejecting = new BulkStub(badIds = Set("bad-1"))
+      try {
+        assert(HttpBulk.bulkWriter(rejecting.url, "graft-docs", errDir, baseBackoffMs = 1)(
+          docsFrame("good-1", "bad-1").coalesce(1), 5L) == 1L)
+      } finally rejecting.stop()
+      assert(spark.read.parquet(s"$errDir/batch=5").count() == 1)
+      // the replay of batch 5 meets an index that accepts every item:
+      // the earlier attempt's rejection must not survive it
+      val accepting = new BulkStub()
+      try {
+        assert(HttpBulk.bulkWriter(accepting.url, "graft-docs", errDir, baseBackoffMs = 1)(
+          docsFrame("good-1", "bad-1").coalesce(1), 5L) == 0L)
+      } finally accepting.stop()
+      assert(spark.read.parquet(s"$errDir/batch=5").count() == 0,
+        "the replay must overwrite the stale rejections")
+    }
   }
 
   test("mappingJson pins the index schema: dates from _ms longs, text+raw strings, nested objects") {
@@ -190,8 +220,8 @@ class HttpBulkSpec extends SparkSpec {
     val stub = new BulkStub(badIds = Set("bad-1"))
     try {
       val errDir = tmp("bulk-itemerr")
-      HttpBulk.bulkWriter(stub.url, "graft-docs", errDir, baseBackoffMs = 1)(
-        docsFrame("good-1", "bad-1", "good-2").coalesce(1), 3L)
+      assert(HttpBulk.bulkWriter(stub.url, "graft-docs", errDir, baseBackoffMs = 1)(
+        docsFrame("good-1", "bad-1", "good-2").coalesce(1), 3L) == 1L)
       val failed = spark.read.parquet(s"$errDir/batch=3")
       val rows = failed.select("item_id", "status", "err")
         .as[(String, Int, String)].collect()
@@ -294,39 +324,75 @@ class HttpBulkSpec extends SparkSpec {
   }
 
   test("a sink that always answers 429 fails the batch after maxAttempts POSTs per body") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val goodBody =
-      """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/a","logStream":"s1",
-        |"subscriptionFilters":["f"],"logEvents":[{"id":"t1","timestamp":1000,"message":"m"}]}""".stripMargin
-    val b64 = java.util.Base64.getEncoder.encodeToString(goodBody.getBytes("UTF-8"))
-    val stub = new BulkStub(fail429First = Int.MaxValue)
-    try {
+    failAfter(Span(60, Seconds)) {
+      import spark.implicits._
+      implicit val ctx = spark.sqlContext
+      val goodBody =
+        """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/a","logStream":"s1",
+          |"subscriptionFilters":["f"],"logEvents":[{"id":"t1","timestamp":1000,"message":"m"}]}""".stripMargin
+      val b64 = java.util.Base64.getEncoder.encodeToString(goodBody.getBytes("UTF-8"))
+      val stub = new BulkStub(fail429First = Int.MaxValue)
+      try {
+        val in = MemoryStream[(Long, Long, String)]
+        in.addData((1L, 10L, b64))
+        val out = tmp("always429-out")
+        val q = Pipeline.run(
+          in.toDF().toDF("event_id", "batch_ms", "data"),
+          out, tmp("always429-ckpt"),
+          bulk = Some(HttpBulk.Target(stub.url, "graft-docs", backoffMs = 1)),
+          trigger = Trigger.AvailableNow())
+        val failure = try intercept[Exception](q.processAllAvailable()) finally q.stop()
+        // the task-side POST loop is the only retry layer: its transient
+        // error surfaces inside a SparkException, never bare
+        val chain = Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(_.isInstanceOf[org.apache.spark.SparkException]),
+          s"no SparkException in the cause chain: $chain")
+        assert(chain.contains(HttpBulk.TransientSinkError(429)),
+          s"no TransientSinkError(429) in the cause chain: $chain")
+        val perBody = stub.attempted.toArray.toSeq.groupBy(identity).values.map(_.size).toSeq
+        assert(perBody.nonEmpty && perBody.forall(_ == 5),
+          s"each body must see exactly maxAttempts = 5 POSTs, not 25: $perBody")
+        assert(stub.bodies.isEmpty, "nothing may be accepted")
+        // the archive runs in the POST's finally: the failed batch still
+        // leaves every document in its replay store
+        val archived = spark.read.parquet(s"$out/SUCCESS/batch=0")
+          .select("event_ref").as[String].collect().toSeq
+        assert(archived == Seq("t1"), s"SUCCESS/batch=0 holds $archived")
+      } finally stub.stop()
+    }
+  }
+
+  test("without a target the archive write fills the channel counts: exact totals, ERROR only where dead letters are") {
+    failAfter(Span(60, Seconds)) {
+      import spark.implicits._
+      implicit val ctx = spark.sqlContext
+      def b64(s: String): String =
+        java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+      def body(id: String, events: Int): String =
+        s"""{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/a","logStream":"s1",
+           |"subscriptionFilters":["f"],"logEvents":[${(1 to events).map(i =>
+          s"""{"id":"$id-$i","timestamp":$i,"message":"m"}""").mkString(",")}]}""".stripMargin
       val in = MemoryStream[(Long, Long, String)]
-      in.addData((1L, 10L, b64))
-      val out = tmp("always429-out")
+      val out = tmp("counts-out")
+      val m = new graft.streaming.ServiceMetrics(spark)
       val q = Pipeline.run(
-        in.toDF().toDF("event_id", "batch_ms", "data"),
-        out, tmp("always429-ckpt"),
-        bulk = Some(HttpBulk.Target(stub.url, "graft-docs", backoffMs = 1)),
-        trigger = Trigger.AvailableNow())
-      val failure = try intercept[Exception](q.processAllAvailable()) finally q.stop()
-      // the task-side POST loop is the only retry layer: its transient
-      // error reaches the driver inside a SparkException, never bare
-      val chain = Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null).toSeq
-      assert(chain.exists(_.isInstanceOf[org.apache.spark.SparkException]),
-        s"no SparkException in the cause chain: $chain")
-      assert(chain.contains(HttpBulk.TransientSinkError(429)),
-        s"no TransientSinkError(429) in the cause chain: $chain")
-      val perBody = stub.attempted.toArray.toSeq.groupBy(identity).values.map(_.size).toSeq
-      assert(perBody.nonEmpty && perBody.forall(_ == 5),
-        s"each body must see exactly maxAttempts = 5 POSTs, not 25: $perBody")
-      assert(stub.bodies.isEmpty, "nothing may be accepted")
-      // the archive runs in the POST's finally: the failed batch still
-      // leaves every document in its replay store
-      val archived = spark.read.parquet(s"$out/SUCCESS/batch=0")
-        .select("event_ref").as[String].collect().toSeq
-      assert(archived == Seq("t1"), s"SUCCESS/batch=0 holds $archived")
-    } finally stub.stop()
+        in.toDF().toDF("event_id", "batch_ms", "data"), out, tmp("counts-ckpt"),
+        trigger = Trigger.ProcessingTime(0L), metrics = Some(m))
+      try {
+        // batch 0: a 2-event record and a garbage record; batch 1: a
+        // 3-event record only
+        in.addData((1L, 10L, b64(body("a", 2))), (2L, 10L, b64("garbage")))
+        q.processAllAvailable()
+        in.addData((3L, 20L, b64(body("b", 3))))
+        q.processAllAvailable()
+      } finally { q.stop(); m.close() }
+      assert((m.batchesTotal.get, m.documentsIndexed.get, m.documentsDeadLettered.get) == ((2L, 5L, 1L)),
+        s"counts: ${m.snapshot}")
+      assert(spark.read.parquet(s"$out/SUCCESS").count() == 5)
+      val errBatches = spark.read.parquet(s"$out/ERROR").select("batch").as[Int].collect().toSeq
+      assert(errBatches == Seq(0), s"ERROR rows by batch: $errBatches")
+      assert(!Files.exists(java.nio.file.Paths.get(out, "ERROR", "batch=1")),
+        "a batch without dead letters must not write ERROR/batch=<id>")
+    }
   }
 }

@@ -809,10 +809,10 @@ class StreamingSpec extends SparkSpec {
     val dir = tmp("graft-replay")
     val docs = Seq((1L, "a"), (2L, "b")).toDF("event_id", "v")
     val write = Pipeline.channelWriter(dir)
-    write(docs, 7L)
-    write(docs, 7L) // checkpoint-recovery replay of the same batchId
+    write(docs, 7L, true)
+    write(docs, 7L, true) // checkpoint-recovery replay of the same batchId
     assert(spark.read.parquet(dir).count() == 2, "replay must not duplicate rows")
-    write(docs, 8L) // a NEW batch does append to the channel
+    write(docs, 8L, true) // a NEW batch does append to the channel
     assert(spark.read.parquet(dir).count() == 4)
   }
 }
