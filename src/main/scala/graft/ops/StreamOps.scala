@@ -1,15 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Exact, QueryDef, Tables}
 
 /** Streaming-semantics operators (SURVEY.md §2.5 streaming set), exposed
   * here on their batch-equivalent frames so the DuckDB oracle can check
-  * the window/dedup/session logic; streaming/Pipeline.scala runs the same
-  * transforms under `readStream` with watermarks, and the ScalaTest
-  * streaming suite drives them through MemoryStream (late data, replay).
+  * the window/dedup/session logic. The stateful transforms — `sessionize`,
+  * `throttle` and `attributeJoin` — are written once, watermarked, and
+  * run unchanged on batch frames (where watermarks are no-ops) for the
+  * keys and under `readStream` in StreamingSpec, which drives them
+  * through MemoryStream (late data, state expiry).
   *
   * The reference's delivery model is at-least-once with whole-batch
   * Firehose retries (cloudformation-template.yaml:160–161), so replayed
@@ -91,8 +93,76 @@ object StreamOps {
            |  count(*) AS n_total
            |FROM d GROUP BY user_id""".stripMargin))
 
+  /** One event of a keyed stream, for custom sessionization. The
+    * event_time column must ride along — Spark requires the watermarked
+    * column to reach the stateful operator. */
+  final case class KeyedEvent(stream: String, event_ms: Long,
+                              event_time: java.sql.Timestamp)
+
+  /** Open-session state carried between micro-batches. */
+  final case class SessionAgg(startMs: Long, endMs: Long, n: Long)
+
+  /** A closed session: `closedBy` = "gap" (a later event arrived beyond
+    * the gap) or "timeout" (the watermark passed end + gap with no
+    * successor — the stream went quiet). */
+  final case class SessionClosed(stream: String, startMs: Long, endMs: Long,
+                                 n: Long, closedBy: String)
+
+  /** Custom stateful sessionization via `flatMapGroupsWithState`:
+    * gap-based sessions that emit ONLY on close, tagged with why they
+    * closed — semantics `session_window` cannot express (it emits every
+    * finalized window, untagged, and cannot distinguish gap-split from
+    * quiescence). State is one `SessionAgg` per active key, expired by
+    * `EventTimeTimeout` at end + gap, so state size tracks the number of
+    * concurrently-active streams, not history — the bounded-state
+    * requirement at 100 TB/day. Late events (behind the watermark) are
+    * dropped by the runtime before reaching the state function. */
+  def sessionize(docs: DataFrame, gapMs: Long): Dataset[SessionClosed] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+    def onGroup(key: String, events: Iterator[KeyedEvent],
+                state: GroupState[SessionAgg]): Iterator[SessionClosed] =
+      if (state.hasTimedOut) {
+        val s = state.get
+        state.remove()
+        Iterator(SessionClosed(key, s.startMs, s.endMs, s.n, "timeout"))
+      } else {
+        val closed = Seq.newBuilder[SessionClosed]
+        var cur = state.getOption
+        events.toSeq.sortBy(_.event_ms).foreach { e =>
+          cur = cur match {
+            case Some(s) if e.event_ms - s.endMs <= gapMs =>
+              // min on start: a within-watermark out-of-order event can
+              // precede the current session start in a later micro-batch
+              Some(SessionAgg(math.min(s.startMs, e.event_ms),
+                math.max(s.endMs, e.event_ms), s.n + 1))
+            case Some(s) =>
+              closed += SessionClosed(key, s.startMs, s.endMs, s.n, "gap")
+              Some(SessionAgg(e.event_ms, e.event_ms, 1))
+            case None =>
+              Some(SessionAgg(e.event_ms, e.event_ms, 1))
+          }
+        }
+        cur.foreach { s =>
+          state.update(s)
+          state.setTimeoutTimestamp(s.endMs + gapMs)
+        }
+        closed.result().iterator
+      }
+
+    docs
+      .withColumn("event_time", timestamp_millis(col("event_ms")))
+      .withWatermark("event_time", "10 minutes")
+      .select(col("logStream").as("stream"), col("event_ms"), col("event_time"))
+      .as[KeyedEvent]
+      .groupByKey(_.stream)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onGroup)
+  }
+
   /** The custom flatMapGroupsWithState sessionizer
-    * (streaming/Pipeline.sessionize) run in BATCH mode, where its state
+    * (`sessionize` above) run in BATCH mode, where its state
     * semantics are still exact: all of a key's events arrive as one
     * group, sessions split on gap > 30 min, and — because batch
     * timeouts never fire — each key's trailing open session is NOT
@@ -101,7 +171,7 @@ object StreamOps {
     * streaming suite drives through MemoryStream. */
   val sessionizeOp = QueryDef(
     "ns_stream_sessionize",
-    (s, dir) => graft.streaming.Pipeline.sessionize(
+    (s, dir) => sessionize(
         Tables.events(s, dir).select(
           concat(lit("u"), col("user_id")).as("logStream"),
           col("ts_ms").as("event_ms")),
@@ -122,7 +192,42 @@ object StreamOps {
            |SELECT g.stream, g.start_ms, g.end_ms, g.n, 'gap' AS closed_by
            |FROM g JOIN last ON g.stream = last.stream AND g.sid < last.maxsid""".stripMargin))
 
-  /** Stream-stream attribution join (Pipeline.attributeJoin) in batch
+  /** Stream-stream attribution join: each purchase matches the same
+    * user's views within the preceding `windowMinutes`. Schemas:
+    * views(user_id, view_id, view_ms), purchases(user_id, purchase_id,
+    * purchase_ms). Both sides are watermarked and the range condition is
+    * on the EVENT-TIME columns, so the streaming symmetric hash join can
+    * expire state: a buffered view is dropped once the purchase-side
+    * watermark passes view_time + window — state tracks the attribution
+    * window's width, never the stream's history (the bounded-state
+    * requirement at 100 TB/day). A range condition on the raw ms longs
+    * instead would run with unbounded state. On batch frames the
+    * watermarks are no-ops and the same plan is an equi-join on user_id
+    * with a residual range filter — StreamOps.streamJoinOp oracle-checks
+    * that form. */
+  def attributeJoin(views: DataFrame, purchases: DataFrame,
+                    windowMinutes: Int = 30,
+                    joinType: String = "inner"): DataFrame = {
+    val v = views
+      .withColumn("view_time", timestamp_millis(col("view_ms")))
+      .withWatermark("view_time", "10 minutes")
+    val p = purchases
+      .withColumnRenamed("user_id", "p_user_id")
+      .withColumn("purchase_time", timestamp_millis(col("purchase_ms")))
+      .withWatermark("purchase_time", "10 minutes")
+    // joinType "left_outer" is the funnel's other half — "views that
+    // never converted": the streaming runtime holds the null-padded row
+    // until the watermark proves no in-window purchase can still arrive,
+    // then emits it exactly once (StreamingSpec drives the expiry).
+    v.join(p,
+      col("user_id") === col("p_user_id") &&
+        col("purchase_time") >= col("view_time") &&
+        col("purchase_time") < col("view_time") + expr(s"INTERVAL $windowMinutes MINUTES"),
+      joinType)
+      .select(col("view_id"), col("purchase_id"))
+  }
+
+  /** Stream-stream attribution join (`attributeJoin` above) in batch
     * mode, where its semantics are exact: every purchase pairs with the
     * same user's views from the preceding 30 minutes. The oracle is the
     * equi-join + range-filter form the batch planner runs; the streaming
@@ -132,7 +237,7 @@ object StreamOps {
     "ns_stream_join",
     (s, dir) => {
       val ev = Tables.events(s, dir)
-      graft.streaming.Pipeline.attributeJoin(
+      attributeJoin(
         ev.filter(col("event_type") === "view").select(
           col("user_id"), col("event_id").as("view_id"), col("ts_ms").as("view_ms")),
         ev.filter(col("event_type") === "purchase").select(
@@ -160,7 +265,7 @@ object StreamOps {
     "ns_stream_join_outer",
     (s, dir) => {
       val ev = Tables.events(s, dir)
-      graft.streaming.Pipeline.attributeJoin(
+      attributeJoin(
         ev.filter(col("event_type") === "view").select(
           col("user_id"), col("event_id").as("view_id"), col("ts_ms").as("view_ms")),
         ev.filter(col("event_type") === "purchase").select(
@@ -212,8 +317,87 @@ object StreamOps {
       |        ORDER BY n DESC, event_type) AS rnk FROM b)
       |WHERE rnk <= 3""".stripMargin))
 
+  /** One sequenced event of a keyed stream, for throttling: `seq` is
+    * the deterministic within-timestamp tie-break (the upstream record
+    * id). */
+  final case class ThrottleEvent(stream: String, event_ms: Long, seq: Long,
+                                 event_time: java.sql.Timestamp)
+
+  /** Per-key admission counters, one per still-live event-time window. */
+  final case class ThrottleState(windowStarts: Seq[Long], admitted: Seq[Long])
+
+  /** An admit/deny decision for one event. */
+  final case class ThrottleOut(stream: String, window_ms: Long, seq: Long,
+                               event_ms: Long, admitted: Boolean)
+
+  /** Per-key event-rate limiting: admit at most `maxPerWindow` events
+    * per key per event-time window, in (event_ms, seq) order — the
+    * ingest-protection / notification-dedup shape every alerting
+    * downstream runs (Watcher throttle_period, per-tenant ingest caps).
+    * A windowed count can say a key EXCEEDED its budget only after the
+    * window closes; the throttle must decide per event AT ARRIVAL, so
+    * it is custom state: one counter per (key, live window), carried
+    * across micro-batches via `flatMapGroupsWithState` and pruned to
+    * windows the watermark can still touch — state tracks live windows
+    * per active key, never stream history (the bounded-state
+    * requirement at 100 TB/day). In batch mode each key's full history
+    * arrives as one sorted group and the same code computes the exact
+    * semantics the StreamOps oracle checks (row_number ≤ N per key ×
+    * window). */
+  def throttle(events: DataFrame, windowMs: Long, maxPerWindow: Long): Dataset[ThrottleOut] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+    def onGroup(key: String, evs: Iterator[ThrottleEvent],
+                state: GroupState[ThrottleState]): Iterator[ThrottleOut] = {
+      // EventTimeTimeout: a key that went idle fires here with no
+      // events once the watermark passes its horizon — drop its state
+      // entirely (without this, every key ever seen keeps an (empty)
+      // state entry forever: unbounded key-cardinality growth over
+      // weeks of stream uptime)
+      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      var counts: Map[Long, Long] = state.getOption
+        .map(s => s.windowStarts.zip(s.admitted).toMap)
+        .getOrElse(Map.empty)
+      val out = evs.toSeq.sortBy(e => (e.event_ms, e.seq)).map { e =>
+        val w = Math.floorDiv(e.event_ms, windowMs) * windowMs
+        val c = counts.getOrElse(w, 0L)
+        val admit = c < maxPerWindow
+        if (admit) counts = counts.updated(w, c + 1)
+        ThrottleOut(key, w, e.seq, e.event_ms, admit)
+      }
+      // Keep only windows a within-watermark event could still land in.
+      // In batch mode the runtime refuses the watermark accessor
+      // (watermarks are no-ops there); nothing needs pruning because
+      // batch state dies with the job.
+      val wmOpt = scala.util.Try(state.getCurrentWatermarkMs()).toOption
+      val horizon = wmOpt.getOrElse(Long.MinValue + windowMs) - windowMs
+      val live = counts.filter { case (w, _) => w >= horizon }
+      state.update(ThrottleState(live.keys.toSeq.sorted,
+        live.keys.toSeq.sorted.map(live)))
+      // Streaming only: time the state out once the watermark passes
+      // the point where every currently-live window is beyond reach
+      // (w < wm − windowMs dies in the prune above, so maxW + 2·window
+      // covers the last live window plus the pruning slack).
+      wmOpt.foreach { _ =>
+        val maxW = if (live.isEmpty) horizon + windowMs else live.keys.max
+        state.setTimeoutTimestamp(maxW + 2 * windowMs)
+      }
+      out.iterator
+    }
+
+    events
+      .withColumn("event_time", timestamp_millis(col("event_ms")))
+      .withWatermark("event_time", "10 minutes")
+      .select(col("logStream").as("stream"), col("event_ms"), col("seq"), col("event_time"))
+      .as[ThrottleEvent]
+      .groupByKey(_.stream)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onGroup)
+  }
+
   /** The custom flatMapGroupsWithState rate limiter
-    * (streaming/Pipeline.throttle) in BATCH mode: admit at most 5
+    * (`throttle` above) in BATCH mode: admit at most 5
     * events per user per hour, decided per event in (ms, id) order —
     * the Watcher-throttle / per-tenant-ingest-cap semantics a windowed
     * count cannot express (the decision happens AT the event, not when
@@ -231,7 +415,7 @@ object StreamOps {
   private val throttleMax = 5L
   val throttleOp = QueryDef(
     "ns_stream_throttle",
-    (s, dir) => graft.streaming.Pipeline.throttle(
+    (s, dir) => throttle(
         Tables.events(s, dir).select(
           concat(lit("u"), col("user_id")).as("logStream"),
           col("ts_ms").as("event_ms"), col("event_id").as("seq")),
@@ -250,26 +434,42 @@ object StreamOps {
         ("SELECT count(CASE WHEN admitted THEN 1 END) > 0 AND " +
           "count(CASE WHEN NOT admitted THEN 1 END) > 0 FROM r")))
 
+  /** One batch's partial pivot — the same aggregate the one-shot
+    * `ns_transform_pivot` runs, restricted to the batch. */
+  def partial(batch: DataFrame): DataFrame =
+    batch.groupBy("user_id").agg(
+      count(lit(1)).as("n_events"),
+      sum(col("vc")).as("sum_value_c"),
+      max(col("ok")).as("last_ok"),
+      expr("max_by(event_type, ok)").as("last_type"))
+
+  /** Merge two partial states. Associative and commutative: sums add,
+    * the argmax re-decides on the unique key — so any batch split folds
+    * to the same store as the one-shot aggregate. */
+  def merge(a: DataFrame, b: DataFrame): DataFrame =
+    a.unionByName(b).groupBy("user_id").agg(
+      sum(col("n_events")).as("n_events"),
+      sum(col("sum_value_c")).as("sum_value_c"),
+      max(col("last_ok")).as("last_ok"),
+      expr("max_by(last_type, last_ok)").as("last_type"))
+
   /** The continuous `_transform` upsert, batch-twinned: the event log
-    * splits into three "triggers" and folds through TransformStream's
-    * partial/merge — the EXACT functions the streaming store runs per
-    * micro-batch (graft.streaming.TransformStream; TransformStreamSpec
-    * drives the real foreachBatch store with replay-idempotency and
-    * bucketed-IO contracts). The oracle is the one-shot pivot, so a
-    * green row proves the merge is associative: any trigger split
+    * splits into three "triggers", each reduced to its `partial` pivot
+    * and folded into the prior state with `merge` — what a continuous
+    * transform does per micro-batch. The oracle is the one-shot pivot,
+    * so a green row proves the merge is associative: any trigger split
     * converges to the same entity table. last_ms recovers from the
     * ordering key by exact shift (ok = ms·2^20 + event_id). */
   val transformUpsertOp = QueryDef(
     "ns_stream_transform_upsert",
     (s, dir) => {
-      import graft.streaming.TransformStream
       val ev = Tables.events(s, dir).select(
         col("user_id"), col("event_type"),
         cents(col("value")).as("vc"),
         (col("ts_ms") * 1048576L + col("event_id")).as("ok"),
         col("event_id"))
       val batches = (0 to 2).map(i => ev.filter(col("event_id") % 3 === i).drop("event_id"))
-      batches.map(TransformStream.partial).reduce(TransformStream.merge)
+      batches.map(partial).reduce(merge)
         .select(col("user_id"), col("n_events"), col("sum_value_c"),
           shiftright(col("last_ok"), 20).as("last_ms"), col("last_type"))
     },

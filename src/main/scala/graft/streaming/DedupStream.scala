@@ -1,7 +1,10 @@
 package graft.streaming
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.TextOps
@@ -49,10 +52,9 @@ import graft.ops.TextOps
 object DedupStream {
 
   /** Signature-store bucket count. Each trigger writes ≤ storeBuckets
-    * files per store (compaction folds them to one file per bucket) and
-    * reads only the buckets its batch touches; at 100 TB the knob grows
-    * with the corpus (more, smaller buckets → finer pruning) without
-    * changing the plan shape. */
+    * files per store and reads only the buckets its batch touches; at
+    * 100 TB the knob grows with the corpus (more, smaller buckets →
+    * finer pruning) without changing the plan shape. */
   val storeBuckets = 16
 
   private def bandBucket: org.apache.spark.sql.Column =
@@ -86,9 +88,19 @@ object DedupStream {
     } else None
   }
 
+  /** Name of the observation on the persisted results:
+    * row(uniques, dups). */
+  private val verdictCounts = "graft_dedup_verdicts"
+
   /** One micro-batch: flag dups against the store + within-batch, write
     * results to `outDir/batch=<id>`, extend the store with uniques.
-    * Expects columns (doc_id BIGINT, text STRING). */
+    * Expects columns (doc_id BIGINT, text STRING).
+    *
+    * The observation on the persisted results counts uniques and dups
+    * while the results write runs (read from the cached plan — no extra
+    * job). Those counts decide the store writes, and with the band
+    * write's own row count they feed `metrics` once all the batch's
+    * writes succeeded. */
   def sinkBatch(storeDir: String, outDir: String, threshold: Double = 0.5,
                 metrics: Option[ServiceMetrics] = None)
                (batch: Dataset[Row], batchId: Long): Unit = {
@@ -152,32 +164,39 @@ object DedupStream {
         val results = docs.select(col("doc_id"))
           .join(dups.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
           .select(col("doc_id"), col("dup_of"), col("dup_of").isNull.as("is_unique"))
+          .observe(verdictCounts,
+            count_if(col("is_unique")).as("uniques"),
+            count_if(!col("is_unique")).as("dups"))
           .persist()
         try {
           // a micro-batch's output is small by definition — one file per
           // channel per batch, not one per shuffle partition (at a 5 s
           // cadence, 32 files/batch would mint ~550k tiny files/day).
-          // Per-batch uniques/dups ride the write itself as an observe()
-          // node (ServiceMetrics harvests on action success) — zero
-          // extra count jobs, the counted frame is the written one.
-          // coalesce: sum() over an EMPTY micro-batch is null, and the
-          // harvest listener reads longs
-          metrics.fold(results)(m => results.observe(m.dedupResultsMetric,
-              coalesce(sum(when(col("is_unique"), 1L).otherwise(0L)), lit(0L)).as("uniques"),
-              coalesce(sum(when(col("is_unique"), 0L).otherwise(1L)), lit(0L)).as("dups")))
+          // The write scans every cached partition, so it fills the
+          // verdict counts
+          results
             .coalesce(1)  // batch-bounded: one micro-batch of results
             .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+          val verdicts = Bridge.cachedObservation(results, verdictCounts)
+            .map(r => (r.getLong(0), r.getLong(1)))
+          // only unique documents extend the store
+          val extend = verdicts.forall(_._1 > 0)
           val uniques = results.filter(col("is_unique")).select("doc_id")
-          writeStorePartition(
+          val bandRows = writeStorePartition(
             bands.join(broadcast(uniques), "doc_id"),
-            "bkt", s"$storeDir/bands/batch=$batchId",
-            df => metrics.fold(df)(m =>
-              df.observe(m.dedupStoreMetric, count(lit(1)).as("rows"))))
+            "bkt", s"$storeDir/bands/batch=$batchId", extend)
           writeStorePartition(
             sets.join(broadcast(uniques), "doc_id")
               .withColumn("dkt", docBucket(col("doc_id"))),
-            "dkt", s"$storeDir/sets/batch=$batchId")
-          metrics.foreach(_.dedupBatches.incrementAndGet())
+            "dkt", s"$storeDir/sets/batch=$batchId", extend)
+          metrics.foreach { m =>
+            m.dedupBatches.incrementAndGet()
+            verdicts.foreach { case (u, d) =>
+              m.dedupUniques.addAndGet(u)
+              m.dedupDups.addAndGet(d)
+            }
+            m.dedupStoreRows.addAndGet(bandRows)
+          }
         } finally results.unpersist()
       } finally cand.unpersist()
     } finally {
@@ -187,98 +206,39 @@ object DedupStream {
     }
   }
 
-  /** Write one `batch=<id>` store partition, EMPTY-SAFE: a partitioned
+  /** Write one `batch=<id>` store partition and return its row count.
+    * No probe job runs ahead of the write. `mayHaveRows = false` (the
+    * batch has no unique document, known from its verdict counts) skips
+    * the write. Otherwise the count is read back from the written
+    * files' parquet footers on the driver, and a zero count (no unique
+    * document had shingles) deletes what the write left: a partitioned
     * write of an empty frame leaves a fileless directory (just
-    * _SUCCESS) that breaks every later schema-inferring read, so an
-    * all-dups batch writes nothing — and deletes a stale earlier
-    * attempt's partition if one exists (replay idempotence, the
-    * channelWriter emptiness discipline). `observe` decorates ONLY the
-    * non-empty write plan — attached after the emptiness probe, whose
-    * limit-1 action would otherwise harvest a partial count. */
+    * _SUCCESS) that breaks every later schema-inferring read. Either
+    * way a stale earlier attempt's partition does not survive (replay
+    * idempotence). */
   private def writeStorePartition(df: DataFrame, bktCol: String, path: String,
-                                  observe: DataFrame => DataFrame = identity): Unit = {
+                                  mayHaveRows: Boolean): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (df.isEmpty) { if (fs.exists(p)) fs.delete(p, true) }
-    else observe(df).coalesce(1).write.partitionBy(bktCol).mode("overwrite").parquet(path)  // batch-bounded: one micro-batch store partition
-  }
-
-  /** Streams started by `run`, by store dir — compact() refuses to
-    * rewrite a store a live query in this process is reading. The
-    * sentinel marks the window between run() being called and start()
-    * returning the query handle, so a concurrent compact can never
-    * slip through mid-startup; compact() removes entries whose query
-    * has stopped, so the registry does not grow with restarts. */
-  private case object Starting
-  private val activeRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** Compact the signature store: fold every `batch=<id>` partition
-    * with id < `upTo` into ONE consolidated partition, so a
-    * long-running stream's store stays one well-sized file per bucket
-    * instead of one directory per trigger (directory listing cost grows
-    * with trigger count, not corpus size). Rows are `distinct`ed in the
-    * fold, purging the duplicates a replayed batch or a crashed prior
-    * compaction can leave behind.
-    *
-    * Crash- and replay-safe by construction:
-    *  - The consolidated rows live at a FRESH strictly-decreasing
-    *    negative partition id (`min(existing ids, 0) - 1`) — strictly
-    *    before every real batch id, so any batch's strictly-before read
-    *    always sees the consolidated corpus, including a replayed batch
-    *    whose own rows were folded in; and NEVER an id in the read set,
-    *    so a crash between write and delete (which leaves both the new
-    *    consolidation and the olds on disk) just means the next compact
-    *    folds them all into a fresh id — it can never overwrite a
-    *    directory it is also reading.
-    *  - The consolidated partition is WRITTEN BEFORE the old ones are
-    *    deleted: a crash at any point leaves the store complete
-    *    (possibly with duplicate rows until the next compact), never
-    *    empty — the delete-then-rename shape would lose the whole
-    *    corpus to a crash between the two steps.
-    *
-    * MUST run while the stream is stopped (between restarts):
-    * compaction rewrites directories the running query reads. Enforced
-    * for streams this process started via `run` — compacting a store
-    * with a live query throws instead of failing the query's next
-    * trigger with a FileNotFoundException mid-job. */
-  def compact(spark: org.apache.spark.sql.SparkSession, storeDir: String,
-              upTo: Long, targetFiles: Int = 8): Unit = {
-    activeRuns.get(storeDir) match {
-      case null => ()
-      case q: StreamingQuery if !q.isActive =>
-        activeRuns.remove(storeDir, q) // stopped — clean the registry
-      case _ => // Starting sentinel or a live query
-        throw new IllegalStateException(
-          s"a streaming query is still reading $storeDir — stop it before compacting")
-    }
-    for ((sub, bktCol) <- Seq("bands" -> "bkt", "sets" -> "dkt")) {
-      val root = new org.apache.hadoop.fs.Path(s"$storeDir/$sub")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) {
-        val olds = fs.listStatus(root).map(_.getPath)
-          .filter { p =>
-            p.getName.startsWith("batch=") &&
-              p.getName.stripPrefix("batch=").toLong < upTo
-          }
-        if (olds.length > 1) {
-          val oldIds = olds.map(_.getName.stripPrefix("batch=").toLong)
-          val target = math.min(oldIds.min, 0L) - 1L
-          // repartition BY the bucket column: every bucket's rows land
-          // in one task, so the consolidated partition is one file per
-          // bucket — the layout the pruned probe wants. One read per
-          // old partition, unioned: a multi-root read over directories
-          // that THEMSELVES contain bucket partitions is ambiguous to
-          // partition discovery (conflicting-structure error).
-          olds.map(p => spark.read.parquet(p.toString)).reduce(_ unionByName _)
-            .distinct()
-            .repartition(math.max(targetFiles, 1), col(bktCol))
-            .write.partitionBy(bktCol).mode("overwrite")
-            .parquet(s"$storeDir/$sub/batch=$target")
-          olds.foreach(fs.delete(_, true))
-        }
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    val rows =
+      if (!mayHaveRows) 0L
+      else {
+        df.coalesce(1).write.partitionBy(bktCol).mode("overwrite").parquet(path)  // batch-bounded: one micro-batch store partition
+        val files = fs.listFiles(p, true)
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(_.getName.endsWith(".parquet"))
+          .map { f =>
+            val footer = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+            try footer.getRecordCount finally footer.close()
+          }.sum
       }
+    if (rows == 0 && fs.exists(p)) {
+      fs.delete(p, true)
+      // nor leave an empty store root behind the first batch's write
+      if (fs.listStatus(p.getParent).isEmpty) fs.delete(p.getParent, false)
     }
+    rows
   }
 
   /** Adapt the ingest pipeline's SUCCESS-archive documents to the
@@ -325,20 +285,10 @@ object DedupStream {
           checkpointDir: String,
           trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
           threshold: Double = 0.5,
-          metrics: Option[ServiceMetrics] = None): StreamingQuery = {
-    // register BEFORE start(): a compact racing the first trigger must
-    // see the store as claimed even while start() is still executing
-    activeRuns.put(storeDir, Starting)
-    try {
-      val q = source.writeStream
-        .foreachBatch(sinkBatch(storeDir, outDir, threshold, metrics) _)
-        .trigger(trigger)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      activeRuns.put(storeDir, q)
-      q
-    } catch {
-      case e: Throwable => activeRuns.remove(storeDir); throw e
-    }
-  }
+          metrics: Option[ServiceMetrics] = None): StreamingQuery =
+    source.writeStream
+      .foreachBatch(sinkBatch(storeDir, outDir, threshold, metrics) _)
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .start()
 }

@@ -128,7 +128,7 @@ final class FirehoseEndpoint(dropDir: String, port: Int = 0,
   // `Accept: application/json` or the explicit `/metrics.json` path.
   server.createContext("/metrics", (ex: HttpExchange) =>
     if (ex.getRequestMethod == "GET") {
-      // extraMetrics may touch Spark state — a scrape must ALWAYS get a
+      // extraMetrics is caller-supplied — a scrape must ALWAYS get a
       // response, so a supplier failure degrades to handler-only counts
       val counts = Map(
         "requests_total" -> requestsTotal.get(),

@@ -5,6 +5,7 @@ import java.net.{HttpURLConnection, URL}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, col, concat, lit, struct, to_json}
 
 import graft.Json
 
@@ -14,7 +15,7 @@ import graft.Json
   * OnSuccess/OnFailure callbacks).
   *
   * Spark-first shape: the documents frame renders to `_bulk` NDJSON
-  * action/source pairs (Pipeline.toBulkNdjsonKeyed), and each PARTITION
+  * action/source pairs (toBulkNdjsonKeyed), and each PARTITION
   * posts its lines in flushBytes-bounded chunks, each chunk under the
   * retry/backoff envelope below — partitions are the reference's worker
   * goroutines, chunking is its flushBytes threshold, and Spark task
@@ -209,6 +210,37 @@ object HttpBulk {
       def next(): (String, Array[Byte]) = { fill(); ready.dequeue() }
     }
 
+  /** Render a documents frame as OpenSearch `_bulk` NDJSON — one
+    * `{"index":{"_index":...,"_id":...}}` action line and one source
+    * line per document in the `lines` column (reference main.go:546–560
+    * builds exactly this pair per record; outgoing/elasticOutput.go the
+    * source shape). The `_id` is the exploded log event's id, which
+    * makes Firehose whole-batch redelivery idempotent at the index (same
+    * contract the reference gets from ES versioning on id). The
+    * per-record sink credential rides as a separate `access_key` column
+    * ("" = none): the action/source lines never contain the key (it is
+    * transport auth, not document payload), and the bulk writer groups
+    * POST bodies by it so each batch indexes under its own key
+    * (reference main.go:422–424). */
+  def toBulkNdjsonKeyed(docs: DataFrame, index: String): DataFrame = {
+    // message_v is the typed VARIANT twin of the raw `message` wire
+    // field (IngestPipeline binds it once for in-engine extraction and
+    // the SUCCESS store) — serializing both would duplicate the payload
+    // in every source line
+    val dataCols = docs.columns.filterNot(c => c == "access_key" || c == "message_v")
+    val key =
+      if (docs.columns.contains("access_key")) coalesce(col("access_key"), lit(""))
+      else lit("")
+    docs.select(
+      key.as("access_key"),
+      concat(
+        to_json(struct(struct(
+          lit(index).as("_index"),
+          col("event_ref").as("_id")).as("index"))),
+        lit("\n"),
+        to_json(struct(dataCols.map(col).toSeq: _*))).as("lines"))
+  }
+
   /** A writer that POSTs the documents frame to `url` as `_bulk`
     * NDJSON and returns the number of per-item rejections. The POST is
     * one `collect` job: each partition posts its bodies and returns only
@@ -232,7 +264,7 @@ object HttpBulk {
     (docs, batchId) => {
       val spark = docs.sparkSession
       import spark.implicits._
-      val failed = Pipeline.toBulkNdjsonKeyed(docs, index)
+      val failed = toBulkNdjsonKeyed(docs, index)
         .as[(String, String)]
         .mapPartitions { rows =>
           chunksByKey(rows, flushBytes).flatMap { case (key, body) =>

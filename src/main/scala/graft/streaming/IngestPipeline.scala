@@ -112,7 +112,7 @@ object IngestPipeline {
       // channel (variant round-trips parquet in Spark 4), so the
       // indexed store keeps the open-content field typed; the bulk
       // serializer excludes it (the raw `message` string is the wire
-      // field, Pipeline.toBulkNdjsonKeyed).
+      // field, HttpBulk.toBulkNdjsonKeyed).
       .withColumn("message_v", expr("try_parse_json(message)"))
       .withColumn("_line",
         when(isAxway, expr("try_variant_get(message_v, '$.text', 'string')")))

@@ -33,19 +33,21 @@ import graft.ops.Decode
   * loop (HttpBulk); the SUCCESS/ERROR prefixes become two sink
   * directories routed by envelope-parse outcome; checkpointing +
   * idempotent batch ids give the same at-least-once-with-replay contract,
-  * and `dropDuplicatesWithinWatermark` is the replay dedup that contract
-  * implies. The decode chain itself is `route`, unchanged between batch
-  * and streaming (the `k2e_pipeline_*` keys run it through
-  * `Decode.pipeline`) — the point of keeping it declarative.
+  * and a redelivered record overwrites itself at the index (its `_id`
+  * is the log event's id). The decode chain itself is `route`,
+  * unchanged between batch and streaming (the `k2e_pipeline_*` keys
+  * run it through `Decode.pipeline`) — the point of keeping it
+  * declarative.
   *
   * A live trigger runs the bulk POST, the SUCCESS archive and, only for
   * a batch with dead letters, the ERROR write. One observation on the
   * persisted decode counts documents and dead letters while the first
   * of them runs, and those counts decide the later writes (sinkBatch).
   *
-  * At 100 TB/day posture: the only stateful operators (windowed agg,
-  * dedup) are watermark-bounded so state stores stay finite; everything
-  * else is per-record projection that scales with executor count.
+  * At 100 TB/day posture: the ingest path keeps no streaming state —
+  * every stage is a per-record projection that scales with executor
+  * count. This object holds only that service; the stateful stream
+  * operators the query keys check live in `graft.ops.StreamOps`.
   */
 object Pipeline {
 
@@ -154,13 +156,13 @@ object Pipeline {
     *    leaves its replay store before it fails, and it never waits for
     *    the counts;
     *  - ERROR: dead letters > 0;
-    *  - ALERTS: a probe of the matches (their count is only known to
-    *    their own write).
+    *  - ALERTS: matches > 0, counted on the persisted matches (one count
+    *    job; the write then scans the cache).
     * A channel whose `batch=<id>` already exists is rewritten either way
-    * (the stale-replay rule). The counts also feed documents_indexed
-    * and documents_dead_lettered, once per batch whose writes all
-    * succeeded. `enrich` is a per-document stage, so documents are
-    * what the POST and the archive receive.
+    * (the stale-replay rule). The same counts feed documents_indexed,
+    * documents_dead_lettered and alerts_matched, once per batch whose
+    * writes all succeeded. `enrich` is a per-document stage, so
+    * documents are what the POST and the archive receive.
     *
     * Each writer receives the batchId so it can be idempotent under
     * replay (see channelWriter); a writer that throws fails the
@@ -199,6 +201,7 @@ object Pipeline {
       def counts(): Option[(Long, Long)] =
         Bridge.cachedObservation(d, channelCounts).map(r => (r.getLong(0), r.getLong(1)))
       var rejected = 0L
+      var alerted = 0L
       try {
         try bulk.foreach(post => rejected = post(docs, batchId))
         finally archive(docs, batchId, counts().forall(_._1 > 0))
@@ -238,7 +241,11 @@ object Pipeline {
               regexp_replace(col("message"), "[{}\\[\\]\",:]+", " ")).as("text")),
             queries, keywordFields = Map.empty)
             .withColumnRenamed("rule_id", "query_id")
-          w(matches, batchId, !matches.isEmpty)
+            .persist()
+          try {
+            alerted = matches.count()
+            w(matches, batchId, alerted > 0)
+          } finally matches.unpersist()
         }
       } finally if (multi) docs.unpersist()
       val seen = counts()
@@ -250,6 +257,7 @@ object Pipeline {
           m.documentsDeadLettered.addAndGet(dead)
         }
         m.bulkItemRejections.addAndGet(rejected)
+        m.alertsMatched.addAndGet(alerted)
       }
     } finally d.unpersist()
   }
@@ -267,12 +275,8 @@ object Pipeline {
     * not mint one near-empty parquet directory per trigger per channel
     * (up to one trigger per landed request, mostly empty on ERROR).
     * Readers of the channel directory see `batch` as a partition
-    * column.
-    *
-    * `observeAs`: name an observe() node in the write plan so the row
-    * count rides the write action itself (harvested by ServiceMetrics'
-    * listener; the ALERTS channel). */
-  def channelWriter(dir: String, observeAs: Option[String] = None): (DataFrame, Long, Boolean) => Unit =
+    * column. */
+  def channelWriter(dir: String): (DataFrame, Long, Boolean) => Unit =
     (df0, batchId, hasRows) => {
       // the access key is transport auth, not payload — a credential
       // must never land in the archived parquet channels
@@ -280,43 +284,16 @@ object Pipeline {
       val path = new org.apache.hadoop.fs.Path(s"$dir/batch=$batchId")
       val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
       if (hasRows || fs.exists(path))
-        observeAs.fold(df)(n => df.observe(n, count(lit(1)).as("rows")))
-          .write.mode("overwrite").parquet(path.toString)
+        df.write.mode("overwrite").parquet(path.toString)
     }
 
-  /** Render a documents frame as OpenSearch `_bulk` NDJSON — one
-    * `{"index":{"_index":...,"_id":...}}` action line and one source
-    * line per document in the `lines` column (reference main.go:546–560
-    * builds exactly this pair per record; outgoing/elasticOutput.go the
-    * source shape). The `_id` is the exploded log event's id, which
-    * makes Firehose whole-batch redelivery idempotent at the index (same
-    * contract the reference gets from ES versioning on id). The
-    * per-record sink credential rides as a separate `access_key` column
-    * ("" = none): the action/source lines never contain the key (it is
-    * transport auth, not document payload), and the bulk writer groups
-    * POST bodies by it so each batch indexes under its own key
-    * (reference main.go:422–424). */
-  def toBulkNdjsonKeyed(docs: DataFrame, index: String): DataFrame = {
-    // message_v is the typed VARIANT twin of the raw `message` wire
-    // field (IngestPipeline binds it once for in-engine extraction and
-    // the SUCCESS store) — serializing both would duplicate the payload
-    // in every source line
-    val dataCols = docs.columns.filterNot(c => c == "access_key" || c == "message_v")
-    val key =
-      if (docs.columns.contains("access_key")) coalesce(col("access_key"), lit(""))
-      else lit("")
-    docs.select(
-      key.as("access_key"),
-      concat(
-        to_json(struct(struct(
-          lit(index).as("_index"),
-          col("event_ref").as("_id")).as("index"))),
-        lit("\n"),
-        to_json(struct(dataCols.map(col).toSeq: _*))).as("lines"))
-  }
+  /** `HttpBulk.toBulkNdjsonKeyed`, under the name perfbench's render
+    * probe compiles against. */
+  def toBulkNdjsonKeyed(docs: DataFrame, index: String): DataFrame =
+    HttpBulk.toBulkNdjsonKeyed(docs, index)
 
   /** Start the ingest stream over a source of (event_id, batch_ms,
-    * data) envelope rows (see SourceConfig): decode (per-record
+    * data) envelope rows (see SourceConfig.schema): decode (per-record
     * encoding sniff) → route → SUCCESS/ + ERROR/ parquet channels
     * (reference cloudformation-template.yaml:170–171), checkpointed for
     * restart recovery.
@@ -371,221 +348,6 @@ object Pipeline {
       post,
       channelWriter(s"$outDir/ERROR"),
       enrich, metrics,
-      alertQueries.map(qs =>
-        (channelWriter(s"$outDir/ALERTS", metrics.map(_.alertsMetric)), qs))) _)
-  }
-
-  /** Event-time tumbling counts with a 10-minute watermark: events later
-    * than the watermark are dropped, and window state is reclaimed — the
-    * bounded-state form of StreamOps.tumblingOp (SURVEY §2.5). */
-  def tumblingCounts(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("event_time", timestamp_millis(col("event_ms")))
-      .withWatermark("event_time", "10 minutes")
-      .groupBy(window(col("event_time"), "1 hour"), col("logGroup"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("logGroup"), col("n"))
-
-  /** Hopping twin of tumblingCounts: 1-hour windows sliding every 30
-    * minutes — each event feeds two open windows; watermark close and
-    * late-data drop semantics are identical per window. */
-  def hoppingCounts(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("event_time", timestamp_millis(col("event_ms")))
-      .withWatermark("event_time", "10 minutes")
-      .groupBy(window(col("event_time"), "1 hour", "30 minutes"), col("logGroup"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("logGroup"), col("n"))
-
-  /** Stream-stream attribution join: each purchase matches the same
-    * user's views within the preceding `windowMinutes`. Schemas:
-    * views(user_id, view_id, view_ms), purchases(user_id, purchase_id,
-    * purchase_ms). Both sides are watermarked and the range condition is
-    * on the EVENT-TIME columns, so the streaming symmetric hash join can
-    * expire state: a buffered view is dropped once the purchase-side
-    * watermark passes view_time + window — state tracks the attribution
-    * window's width, never the stream's history (the bounded-state
-    * requirement at 100 TB/day). A range condition on the raw ms longs
-    * instead would run with unbounded state. On batch frames the
-    * watermarks are no-ops and the same plan is an equi-join on user_id
-    * with a residual range filter — StreamOps.streamJoinOp oracle-checks
-    * that form. */
-  def attributeJoin(views: DataFrame, purchases: DataFrame,
-                    windowMinutes: Int = 30,
-                    joinType: String = "inner"): DataFrame = {
-    val v = views
-      .withColumn("view_time", timestamp_millis(col("view_ms")))
-      .withWatermark("view_time", "10 minutes")
-    val p = purchases
-      .withColumnRenamed("user_id", "p_user_id")
-      .withColumn("purchase_time", timestamp_millis(col("purchase_ms")))
-      .withWatermark("purchase_time", "10 minutes")
-    // joinType "left_outer" is the funnel's other half — "views that
-    // never converted": the streaming runtime holds the null-padded row
-    // until the watermark proves no in-window purchase can still arrive,
-    // then emits it exactly once (StreamingSpec drives the expiry).
-    v.join(p,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_time") >= col("view_time") &&
-        col("purchase_time") < col("view_time") + expr(s"INTERVAL $windowMinutes MINUTES"),
-      joinType)
-      .select(col("view_id"), col("purchase_id"))
-  }
-
-  /** Replay dedup on the upstream record id: Firehose redelivers whole
-    * batches (at-least-once, cloudformation-template.yaml:160–161), so
-    * duplicates share `event_ref`; the watermark bounds how long each id
-    * is remembered, keeping dedup state finite at 100 TB/day. */
-  def dedupReplays(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("event_time", timestamp_millis(col("event_ms")))
-      .withWatermark("event_time", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_ref")
-
-  /** One event of a keyed stream, for custom sessionization. The
-    * event_time column must ride along — Spark requires the watermarked
-    * column to reach the stateful operator. */
-  final case class KeyedEvent(stream: String, event_ms: Long,
-                              event_time: java.sql.Timestamp)
-
-  /** One sequenced event of a keyed stream, for throttling: `seq` is
-    * the deterministic within-timestamp tie-break (the upstream record
-    * id). */
-  final case class ThrottleEvent(stream: String, event_ms: Long, seq: Long,
-                                 event_time: java.sql.Timestamp)
-
-  /** Per-key admission counters, one per still-live event-time window. */
-  final case class ThrottleState(windowStarts: Seq[Long], admitted: Seq[Long])
-
-  /** An admit/deny decision for one event. */
-  final case class ThrottleOut(stream: String, window_ms: Long, seq: Long,
-                               event_ms: Long, admitted: Boolean)
-
-  /** Per-key event-rate limiting: admit at most `maxPerWindow` events
-    * per key per event-time window, in (event_ms, seq) order — the
-    * ingest-protection / notification-dedup shape every alerting
-    * downstream runs (Watcher throttle_period, per-tenant ingest caps).
-    * A windowed count can say a key EXCEEDED its budget only after the
-    * window closes; the throttle must decide per event AT ARRIVAL, so
-    * it is custom state: one counter per (key, live window), carried
-    * across micro-batches via `flatMapGroupsWithState` and pruned to
-    * windows the watermark can still touch — state tracks live windows
-    * per active key, never stream history (the bounded-state
-    * requirement at 100 TB/day). In batch mode each key's full history
-    * arrives as one sorted group and the same code computes the exact
-    * semantics the StreamOps oracle checks (row_number ≤ N per key ×
-    * window). */
-  def throttle(events: DataFrame, windowMs: Long, maxPerWindow: Long): Dataset[ThrottleOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-    def onGroup(key: String, evs: Iterator[ThrottleEvent],
-                state: GroupState[ThrottleState]): Iterator[ThrottleOut] = {
-      // EventTimeTimeout: a key that went idle fires here with no
-      // events once the watermark passes its horizon — drop its state
-      // entirely (without this, every key ever seen keeps an (empty)
-      // state entry forever: unbounded key-cardinality growth over
-      // weeks of stream uptime)
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      var counts: Map[Long, Long] = state.getOption
-        .map(s => s.windowStarts.zip(s.admitted).toMap)
-        .getOrElse(Map.empty)
-      val out = evs.toSeq.sortBy(e => (e.event_ms, e.seq)).map { e =>
-        val w = Math.floorDiv(e.event_ms, windowMs) * windowMs
-        val c = counts.getOrElse(w, 0L)
-        val admit = c < maxPerWindow
-        if (admit) counts = counts.updated(w, c + 1)
-        ThrottleOut(key, w, e.seq, e.event_ms, admit)
-      }
-      // Keep only windows a within-watermark event could still land in.
-      // In batch mode the runtime refuses the watermark accessor
-      // (watermarks are no-ops there); nothing needs pruning because
-      // batch state dies with the job.
-      val wmOpt = scala.util.Try(state.getCurrentWatermarkMs()).toOption
-      val horizon = wmOpt.getOrElse(Long.MinValue + windowMs) - windowMs
-      val live = counts.filter { case (w, _) => w >= horizon }
-      state.update(ThrottleState(live.keys.toSeq.sorted,
-        live.keys.toSeq.sorted.map(live)))
-      // Streaming only: time the state out once the watermark passes
-      // the point where every currently-live window is beyond reach
-      // (w < wm − windowMs dies in the prune above, so maxW + 2·window
-      // covers the last live window plus the pruning slack).
-      wmOpt.foreach { _ =>
-        val maxW = if (live.isEmpty) horizon + windowMs else live.keys.max
-        state.setTimeoutTimestamp(maxW + 2 * windowMs)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("event_time", timestamp_millis(col("event_ms")))
-      .withWatermark("event_time", "10 minutes")
-      .select(col("logStream").as("stream"), col("event_ms"), col("seq"), col("event_time"))
-      .as[ThrottleEvent]
-      .groupByKey(_.stream)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onGroup)
-  }
-
-  /** Open-session state carried between micro-batches. */
-  final case class SessionAgg(startMs: Long, endMs: Long, n: Long)
-
-  /** A closed session: `closedBy` = "gap" (a later event arrived beyond
-    * the gap) or "timeout" (the watermark passed end + gap with no
-    * successor — the stream went quiet). */
-  final case class SessionClosed(stream: String, startMs: Long, endMs: Long,
-                                 n: Long, closedBy: String)
-
-  /** Custom stateful sessionization via `flatMapGroupsWithState`:
-    * gap-based sessions that emit ONLY on close, tagged with why they
-    * closed — semantics `session_window` cannot express (it emits every
-    * finalized window, untagged, and cannot distinguish gap-split from
-    * quiescence). State is one `SessionAgg` per active key, expired by
-    * `EventTimeTimeout` at end + gap, so state size tracks the number of
-    * concurrently-active streams, not history — the bounded-state
-    * requirement at 100 TB/day. Late events (behind the watermark) are
-    * dropped by the runtime before reaching the state function. */
-  def sessionize(docs: DataFrame, gapMs: Long): Dataset[SessionClosed] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-    def onGroup(key: String, events: Iterator[KeyedEvent],
-                state: GroupState[SessionAgg]): Iterator[SessionClosed] =
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator(SessionClosed(key, s.startMs, s.endMs, s.n, "timeout"))
-      } else {
-        val closed = Seq.newBuilder[SessionClosed]
-        var cur = state.getOption
-        events.toSeq.sortBy(_.event_ms).foreach { e =>
-          cur = cur match {
-            case Some(s) if e.event_ms - s.endMs <= gapMs =>
-              // min on start: a within-watermark out-of-order event can
-              // precede the current session start in a later micro-batch
-              Some(SessionAgg(math.min(s.startMs, e.event_ms),
-                math.max(s.endMs, e.event_ms), s.n + 1))
-            case Some(s) =>
-              closed += SessionClosed(key, s.startMs, s.endMs, s.n, "gap")
-              Some(SessionAgg(e.event_ms, e.event_ms, 1))
-            case None =>
-              Some(SessionAgg(e.event_ms, e.event_ms, 1))
-          }
-        }
-        cur.foreach { s =>
-          state.update(s)
-          state.setTimeoutTimestamp(s.endMs + gapMs)
-        }
-        closed.result().iterator
-      }
-
-    docs
-      .withColumn("event_time", timestamp_millis(col("event_ms")))
-      .withWatermark("event_time", "10 minutes")
-      .select(col("logStream").as("stream"), col("event_ms"), col("event_time"))
-      .as[KeyedEvent]
-      .groupByKey(_.stream)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onGroup)
+      alertQueries.map(qs => (channelWriter(s"$outDir/ALERTS"), qs))) _)
   }
 }

@@ -34,8 +34,9 @@ object Replay {
 
   /** Re-index `archiveDir` (a SUCCESS/ channel: `batch=<id>` parquet
     * partitions) into `esUrl`. Returns the number of documents
-    * replayed. */
-  /** `mappingUrl = Some(putUrl)` PUTs the archive schema's pinned
+    * replayed.
+    *
+    * `mappingUrl = Some(putUrl)` PUTs the archive schema's pinned
     * mapping (HttpBulk.mappingJson) to that URL — typically
     * `<es>/<index>` — BEFORE the first bulk, so a rebuilt index never
     * falls back to dynamic mapping. A 400 from an index that already

@@ -43,7 +43,7 @@ object Serve {
     val clock = new ArrivalClock
     // streaming-side counters, served with the handler counters on the
     // endpoint's GET /metrics (reference main.go:216–217 ginprom)
-    val metrics = new ServiceMetrics(spark)
+    val metrics = new ServiceMetrics
     val endpoint = sys.env.get("SPARK_GRAFT_HTTP_PORT")
       .map(p => new FirehoseEndpoint(args(0), p.toInt,
         extraMetrics = () => metrics.snapshot, accessLog = true,
@@ -52,7 +52,7 @@ object Serve {
 
     // delete processed drop files after commit: the service's spool must
     // not grow one file per HTTP request forever
-    val source = SourceConfig.fileDrop(args(0), cleanSource = Some("delete")).open(spark)
+    val source = SourceConfig.fileDrop(spark, args(0), cleanSource = Some("delete"))
 
     // In-engine ingest pipeline (reference main.go:437 binds
     // pipeline=<name> on every bulk request and ES runs
@@ -73,38 +73,10 @@ object Serve {
         (IngestPipeline.scrubPii _).andThen(enrichStage)
       else enrichStage
 
-    // SPARK_GRAFT_ALERTS="1:spark,join;2:slow": in-stream percolation —
-    // each `id:term[,term…]` clause registers one conjunctive query;
+    // SPARK_GRAFT_ALERTS="1:spark,join;2:slow": in-stream percolation;
     // matches land in <outDir>/ALERTS and count as alerts_matched on
-    // /metrics. Malformed clauses fail at startup with the variable's
-    // name, not mid-stream.
-    val alertQueries: Option[Seq[(Long, String)]] =
-      sys.env.get("SPARK_GRAFT_ALERTS").map { spec =>
-        try {
-          val qs = spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).flatMap { clause =>
-            val Array(id, terms) = clause.split(":", 2)
-            // trim BEFORE the emptiness filter: a whitespace-only term
-            // would otherwise register as "" and corrupt the
-            // conjunction count; a clause with no terms at all is a
-            // config mistake that must fail here, not register a
-            // never-matching query
-            val ts = terms.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-            if (ts.isEmpty) throw new IllegalArgumentException(
-              s"SPARK_GRAFT_ALERTS clause '$clause' has no terms")
-            ts.map(t => id.trim.toLong -> t)
-          }
-          // an empty/separator-only value would silently enable a
-          // zero-query stage: every batch pays a pointless percolate
-          // plan while the operator believes alerts are configured
-          if (qs.isEmpty) throw new IllegalArgumentException(
-            s"SPARK_GRAFT_ALERTS is set but contains no queries: '$spec'")
-          qs
-        } catch {
-          case _: MatchError | _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"SPARK_GRAFT_ALERTS must be 'id:term[,term…][;…]', got '$spec'")
-        }
-      }
+    // /metrics (see alertQueries)
+    val alertQueries = sys.env.get("SPARK_GRAFT_ALERTS").map(Serve.alertQueries)
 
     // No static sink auth: each record rides its own captured access_key
     // to the sink ("Basic " + key, main.go:414), and a keyless record
@@ -135,8 +107,9 @@ object Serve {
       // may vanish mid-read. Skip them instead of wedging the stage on
       // FileNotFound: the replacements re-feed (at-least-once), re-fed
       // docs carry the same deterministic doc_id, the dedup sink
-      // filters self-pairs by id, and compact()'s distinct() collapses
-      // the redundant signature rows a re-feed appends.
+      // filters self-pairs by id, and the candidate pairs are
+      // distinct, so the redundant signature rows a re-feed appends
+      // change no verdict.
       val archived = spark.readStream
         .schema(DedupStream.pipelineDocsSchema)
         .option("ignoreMissingFiles", "true")
@@ -174,7 +147,6 @@ object Serve {
       try query.stop() catch { case _: Exception => () }
       dedup.foreach(q => try q.stop() catch { case _: Exception => () })
       endpoint.foreach(_.stop())
-      metrics.close()
     }
     try {
       query.awaitTermination()
@@ -193,5 +165,42 @@ object Serve {
         else dedup.foreach(_.awaitTermination())
       }
     } finally endpoint.foreach(_.stop())
+  }
+
+  /** Parse `SPARK_GRAFT_ALERTS`: `id:term[,term…][;…]`. Each clause
+    * registers ONE conjunctive rule under its id — a document fires rule
+    * `id` only when it matches every term of the clause, and writes one
+    * ALERTS row for it. Each term keeps its own query_string meaning
+    * (it is parenthesized), so `1:spark,slow join` is
+    * `(spark) AND (slow join)`. Malformed clauses, a value with no
+    * clauses and an id repeated across clauses fail at startup with the
+    * variable's name, not mid-stream. */
+  def alertQueries(spec: String): Seq[(Long, String)] = {
+    val qs =
+      try spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { clause =>
+        val Array(id, terms) = clause.split(":", 2)
+        // trim BEFORE the emptiness filter: a whitespace-only term would
+        // otherwise register as an empty group; a clause with no terms
+        // at all is a config mistake that must fail here, not register
+        // a never-matching query
+        val ts = terms.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+        if (ts.isEmpty) throw new IllegalArgumentException(
+          s"SPARK_GRAFT_ALERTS clause '$clause' has no terms")
+        id.trim.toLong -> ts.map(t => s"($t)").mkString(" AND ")
+      } catch {
+        case _: MatchError | _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_ALERTS must be 'id:term[,term…][;…]', got '$spec'")
+      }
+    // an empty/separator-only value would silently enable a zero-query
+    // stage: every batch pays a pointless percolate plan while the
+    // operator believes alerts are configured
+    if (qs.isEmpty) throw new IllegalArgumentException(
+      s"SPARK_GRAFT_ALERTS is set but contains no queries: '$spec'")
+    val repeated = qs.groupBy(_._1).collect { case (id, cs) if cs.size > 1 => id }
+    if (repeated.nonEmpty) throw new IllegalArgumentException(
+      s"SPARK_GRAFT_ALERTS repeats query id ${repeated.toSeq.sorted.mkString(", ")}: " +
+        "each id names one clause")
+    qs
   }
 }

@@ -1,19 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The pluggable push-source seam (SURVEY §2.1 S1).
+/** The push-source contract (SURVEY §2.1 S1).
   *
-  * The ingest topology (`Pipeline.run`) consumes an
-  * ENVELOPE FRAME, not a transport: any Structured Streaming source
-  * that delivers `SourceConfig.schema` drops in — the file-drop spool
-  * the HTTP front-end feeds, a `MemoryStream` in tests, Spark's own
-  * rate source through `rateEnvelope`'s adapter, or a Kinesis
-  * connector `format()` on a real cluster (the reference's stated
-  * deployment is Firehose→HTTP; BASELINE's Spark sketch is a Kinesis
-  * source — both are just this contract over different wire).
+  * The ingest topology (`Pipeline.run`) consumes an ENVELOPE FRAME, not
+  * a transport: any streaming DataFrame with the `schema` columns drops
+  * in — the file-drop spool the HTTP front-end feeds (`fileDrop`), a
+  * `MemoryStream` in tests, or a Kinesis connector on a real cluster
+  * (the reference's stated deployment is Firehose→HTTP; BASELINE's
+  * Spark sketch is a Kinesis source). A connector with its own wire
+  * schema is opened with `spark.readStream` directly and selected onto
+  * these columns — e.g. Kinesis (data, sequenceNumber,
+  * approximateArrivalTimestamp) become (data, event_id, batch_ms). The
+  * topology never changes.
   *
   * Column semantics (the contract a new connector must map to):
   *  - `event_id BIGINT` — unique per record within the source; becomes
@@ -32,39 +33,16 @@ import org.apache.spark.sql.types.StructType
   * Only `event_id`, `batch_ms`, `data` are required — `Pipeline.decoded`
   * tolerates sources without the trailing two columns (a MemoryStream
   * of triples) by applying those fallbacks.
-  *
-  * Sources with their OWN wire schema (rate, a Kinesis connector's
-  * (partitionKey, data, sequenceNumber, ...)) plug in through
-  * `adapter`: the source is opened schema-less (most connectors reject
-  * a user-specified schema) and the adapter is the per-connector
-  * mapping onto the envelope columns — the only code a new transport
-  * needs. The topology never changes.
   */
-final case class SourceConfig(format: String,
-                              options: Map[String, String] = Map.empty,
-                              path: Option[String] = None,
-                              schema: StructType = SourceConfig.schema,
-                              adapter: Option[DataFrame => DataFrame] = None) {
-  /** Open the source as a streaming envelope frame. */
-  def open(spark: SparkSession): DataFrame = {
-    val reader = spark.readStream.format(format).options(options)
-    // an adapter source defines its own schema and maps it to the
-    // envelope; a contract source is read with the envelope schema
-    // directly (also avoids a blocking inference pass over file spools)
-    val configured = if (adapter.isDefined) reader else reader.schema(schema)
-    val df = path.fold(configured.load())(configured.load)
-    adapter.fold(df)(f => f(df))
-  }
-}
-
 object SourceConfig {
-  /** The envelope contract every push source delivers (see class doc). */
+  /** The envelope contract every push source delivers (see object doc). */
   val schema: StructType = StructType.fromDDL(
     "event_id BIGINT, batch_ms BIGINT, data STRING, request_id STRING, " +
       "access_key STRING")
 
   /** The zero-egress file-drop spool: landed Firehose batches as
-    * JSON-lines files (one per HTTP request, atomically renamed in).
+    * JSON-lines files (one per HTTP request, atomically renamed in),
+    * opened as a streaming envelope frame.
     * The explicit schema avoids a blocking inference pass over the drop
     * directory; `maxFilesPerTrigger` bounds per-micro-batch work so a
     * backlog drains in steady flushes instead of one giant batch;
@@ -72,44 +50,10 @@ object SourceConfig {
     * once their batch commits — without it the spool grows one file per
     * HTTP request forever (Serve turns on "delete"; tests and
     * replay-from-scratch leave it off to re-read the spool). */
-  def fileDrop(dir: String, maxFilesPerTrigger: Int = 16,
-               cleanSource: Option[String] = None): SourceConfig =
-    SourceConfig("json",
-      Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString) ++
-        cleanSource.map("cleanSource" -> _),
-      Some(dir))
-
-  /** A second REAL source through the seam: Spark's deterministic
-    * rate-micro-batch source (timestamp, value) adapted onto the
-    * envelope contract — each generated row becomes a base64'd
-    * single-event CloudWatch envelope, exactly what the wire carries.
-    * Proves the adapter seam with a connector that has its own schema
-    * (the reader is opened schema-less; the adapter is the mapping),
-    * the same wiring a Kinesis connector needs: its (data,
-    * sequenceNumber, approximateArrivalTimestamp) map to (data,
-    * event_id, batch_ms) the same way. */
-  def rateEnvelope(rowsPerBatch: Int = 10,
-                   startTimestampMs: Long = 1600000000000L): SourceConfig =
-    SourceConfig("rate-micro-batch",
-      Map("rowsPerBatch" -> rowsPerBatch.toString,
-        "numPartitions" -> "1",
-        "startTimestamp" -> startTimestampMs.toString),
-      adapter = Some { df =>
-        val envelope = to_json(struct(
-          lit("DATA_MESSAGE").as("messageType"),
-          lit("1").as("owner"),
-          lit("/app/rate").as("logGroup"),
-          lit("rate-0").as("logStream"),
-          array(lit("f")).as("subscriptionFilters"),
-          array(struct(
-            concat(lit("r"), col("value")).as("id"),
-            unix_millis(col("timestamp")).as("timestamp"),
-            concat(lit("rate event "), col("value")).as("message"))).as("logEvents")))
-        df.select(
-          col("value").as("event_id"),
-          unix_millis(col("timestamp")).as("batch_ms"),
-          base64(envelope.cast("binary")).as("data"),
-          lit("rate").as("request_id"),
-          lit("").as("access_key"))
-      })
+  def fileDrop(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 16,
+               cleanSource: Option[String] = None): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .options(cleanSource.map("cleanSource" -> _).toMap)
+      .json(dir)
 }

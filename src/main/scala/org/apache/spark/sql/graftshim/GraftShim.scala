@@ -25,18 +25,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Drain the shared async listener bus so QueryExecutionListener
-    * effects (ServiceMetrics' observed-metrics harvest) are visible to
-    * the caller — `listenerBus`/`waitUntilEmpty` are `private[spark]`,
-    * hence bridged here. Bounded wait: a metrics scrape must never hang
-    * behind a backlogged bus (the default waitUntilEmpty blocks 10 s
-    * then THROWS); a timeout just means the caller serves
-    * counters that are one event-drain stale. */
-  def flushListenerBus(spark: org.apache.spark.sql.SparkSession,
-                       timeoutMs: Long = 2000): Boolean =
-    try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
-    catch { case _: java.util.concurrent.TimeoutException => false }
-
   /** The row of the `observe(name, …)` node inside the plan `df` is
     * persisted under, read straight from that cached plan's
     * accumulators: no job and no listener, so it never waits.

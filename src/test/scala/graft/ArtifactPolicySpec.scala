@@ -16,13 +16,14 @@ import scala.jdk.CollectionConverters._
   * comment, and the one corpus-cardinality artifact that was caught
   * (bbq_packed) is asserted to build with a parallel write.
   *
-  * Three source-layout guards ride along: `src/main` builds a
+  * Four source-layout guards ride along: `src/main` builds a
   * SparkSession only in `Session.scala` (one session policy for every
   * entry point), holds only the five mains the service and the driver
-  * run — diagnostic mains live in `src/test` — and touches Spark's
+  * run — diagnostic mains live in `src/test` — touches Spark's
   * private streaming internals (the query manager's `startQuery`, the
   * foreachBatch sink, the trigger clock) only under `graftshim/`, so a
-  * Spark upgrade has one place to fix.
+  * Spark upgrade has one place to fix, and registers no query-execution
+  * listener, so `/metrics` has one counting path.
   */
 class ArtifactPolicySpec extends SparkSpec {
 
@@ -75,6 +76,15 @@ class ArtifactPolicySpec extends SparkSpec {
     } yield s"$p: $needle"
     assert(offenders.isEmpty,
       s"Spark streaming internals outside graftshim: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main counts /metrics one way: no query-execution listener is registered") {
+    // every counter is added by the code that did the work; a listener
+    // harvesting observe() nodes off the async bus is a second path
+    val offenders = Seq("QueryExecutionListener", "listenerManager.register")
+      .flatMap(mainFilesContaining)
+    assert(offenders.isEmpty,
+      s"query-execution listeners in src/main: ${offenders.mkString(", ")}")
   }
 
   test("bbq packed index (corpus-cardinality artifact) builds with a parallel write") {

@@ -84,89 +84,6 @@ class DedupStreamSpec extends SparkSpec {
       .filter(col("doc_id") === 1L).count()
     assert(storedRows == onceRows,
       s"doc 3's band rows must appear exactly once per band like doc 1's ($storedRows vs $onceRows)")
-
-    // compaction (stream stopped): batches 0..1 fold into one partition,
-    // content identical, and a later batch still dedups against it
-    val before = spark.read.parquet(s"$storeDir/bands")
-      .select("doc_id", "band", "sig").as[(Long, Int, String)].collect().toSet
-    DedupStream.compact(spark, storeDir, upTo = 2L)
-    val fs = new java.io.File(s"$storeDir/bands")
-    assert(fs.listFiles().count(_.getName.startsWith("batch=")) == 1,
-      "compaction must leave a single batch partition")
-    val after = spark.read.parquet(s"$storeDir/bands")
-      .select("doc_id", "band", "sig").as[(Long, Int, String)].collect().toSet
-    assert(after == before, "compaction must preserve the store's content")
-    // 7 dups against the folded store; 20 is new (and keeps batch 2's
-    // store partition non-empty so the second compaction has two
-    // partitions to fold — an all-dups batch writes no store partition)
-    sink(Seq((7L, tA),
-      (20L, "a wholly new sentence about bucketed stores and partition pruning"))
-      .toDF("doc_id", "text"), 2L)
-    val late = spark.read.parquet(outDir).filter(col("batch") === 2)
-      .select(col("doc_id"), col("dup_of")).as[(Long, Option[Long])].collect().toSet
-    assert(late == Set((7L, Some(1L)), (20L, None)),
-      s"post-compaction dedup must still hit doc 1: $late")
-
-    // a SECOND compaction folds the previous consolidation (batch=-1)
-    // with the new batches into the alternate partition (batch=-2) —
-    // content preserved, still a single partition, dedup still works
-    val before2 = spark.read.parquet(s"$storeDir/bands")
-      .select("doc_id", "band", "sig").as[(Long, Int, String)].collect().toSet
-    DedupStream.compact(spark, storeDir, upTo = 3L)
-    val parts = new java.io.File(s"$storeDir/bands").listFiles()
-      .map(_.getName).filter(_.startsWith("batch=")).toSet
-    assert(parts == Set("batch=-2"), s"second compaction must land on the alternate id: $parts")
-    val after2 = spark.read.parquet(s"$storeDir/bands")
-      .select("doc_id", "band", "sig").as[(Long, Int, String)].collect().toSet
-    assert(after2 == before2, "re-compaction must preserve the store's content")
-    sink(Seq((8L, tB)).toDF("doc_id", "text"), 3L)
-    val last = spark.read.parquet(outDir).filter(col("batch") === 3)
-      .select(col("doc_id"), col("dup_of")).as[(Long, Option[Long])].collect().toSet
-    assert(last == Set((8L, Some(3L))), s"post-recompaction dedup must still hit doc 3: $last")
-  }
-
-  test("compact recovers from a crash that left both consolidations on disk") {
-    import spark.implicits._
-    val tA = "the quick brown fox jumps over the lazy dog tonight"
-    val tB = "spark plans a single expand and one shuffle for all sets"
-    val storeDir = tmp("ddc-store")
-    val outDir = tmp("ddc-out")
-    val sink = DedupStream.sinkBatch(storeDir, outDir) _
-    sink(Seq((1L, tA)).toDF("doc_id", "text"), 0L)
-    sink(Seq((2L, tB)).toDF("doc_id", "text"), 1L)
-    DedupStream.compact(spark, storeDir, upTo = 2L) // consolidates into batch=-1
-    sink(Seq((3L, "verification joins only candidates while labels propagate to the minimum"))
-      .toDF("doc_id", "text"), 2L)
-    // simulate a SECOND compaction that crashed between write and
-    // delete: its consolidation (batch=-2 = fold of -1 and 2) exists
-    // alongside everything it was folding
-    for (sub <- Seq("bands", "sets")) {
-      val all = spark.read.parquet(s"$storeDir/$sub/batch=-1")
-        .unionByName(spark.read.parquet(s"$storeDir/$sub/batch=2"))
-      val bktCol = if (sub == "bands") "bkt" else "dkt"
-      all.write.partitionBy(bktCol).parquet(s"$storeDir/$sub/batch=-2")
-    }
-    val before = spark.read.parquet(s"$storeDir/bands")
-      .select("doc_id", "band", "sig").distinct()
-      .as[(Long, Int, String)].collect().toSet
-    // the old alternating -1/-2 target would now pick -2 — a directory
-    // in its own read set — and fail every retry; the fresh-id target
-    // must fold the crash state cleanly
-    DedupStream.compact(spark, storeDir, upTo = 3L)
-    val parts = new java.io.File(s"$storeDir/bands").listFiles()
-      .map(_.getName).filter(_.startsWith("batch=")).toSet
-    assert(parts == Set("batch=-3"),
-      s"compact must land on a fresh id outside the read set: $parts")
-    val after = spark.read.parquet(s"$storeDir/bands")
-      .select("doc_id", "band", "sig").as[(Long, Int, String)].collect().toSeq
-    assert(after.toSet == before, "crash-state compaction must preserve the store's content")
-    assert(after.size == after.distinct.size,
-      "compaction must purge the crash state's duplicate rows")
-    // and the consolidated store still dedups
-    sink(Seq((9L, tB)).toDF("doc_id", "text"), 3L)
-    val r = spark.read.parquet(outDir).filter(col("batch") === 3)
-      .select(col("doc_id"), col("dup_of")).as[(Long, Option[Long])].collect().toSet
-    assert(r == Set((9L, Some(2L))), s"post-recovery dedup must still hit doc 2: $r")
   }
 
   test("the per-batch store probe is partition-pruned, never a full corpus scan") {
@@ -195,24 +112,6 @@ class DedupStreamSpec extends SparkSpec {
       s"probe read files outside its bucket set: ${scanned.mkString(", ")}")
   }
 
-  test("compact refuses to rewrite a store a live query is reading") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val storeDir = tmp("ddl-store")
-    val q = DedupStream.run(in.toDF().toDF("doc_id", "text"),
-      storeDir, tmp("ddl-out"), tmp("ddl-ckpt"))
-    in.addData((1L, "the quick brown fox jumps over the lazy dog tonight"))
-    q.processAllAvailable()
-    val e = intercept[IllegalStateException](
-      DedupStream.compact(spark, storeDir, upTo = 99L))
-    assert(e.getMessage.contains("stop it before compacting"))
-    q.stop()
-    q.awaitTermination()
-    // stopped → compaction proceeds (single partition: no-op fold is fine)
-    DedupStream.compact(spark, storeDir, upTo = 99L)
-  }
-
   test("a pre-bucketed legacy store fails fast with a legible error, not mid-trigger") {
     import spark.implicits._
     val storeDir = tmp("ddo-store")
@@ -226,28 +125,25 @@ class DedupStreamSpec extends SparkSpec {
 
   test("an empty micro-batch neither breaks the store nor corrupts the metrics") {
     import spark.implicits._
-    val metrics = new graft.streaming.ServiceMetrics(spark)
-    try {
-      val storeDir = tmp("dde-store")
-      val sink = DedupStream.sinkBatch(storeDir, tmp("dde-out"),
-        metrics = Some(metrics)) _
-      sink(Seq((1L, "the quick brown fox jumps over the lazy dog tonight"))
-        .toDF("doc_id", "text"), 0L)
-      // an empty trigger: observed sums over zero rows must coalesce to
-      // 0 (a null would NPE the harvest listener) and the store must
-      // not gain a fileless partition
-      sink(Seq.empty[(Long, String)].toDF("doc_id", "text"), 1L)
-      val snap = metrics.snapshot
-      assert(snap("dedup_batches") == 2L && snap("dedup_uniques") == 1L &&
-        snap("dedup_dups") == 0L, s"got $snap")
-      val parts = new java.io.File(s"$storeDir/bands").listFiles()
-        .map(_.getName).filter(_.startsWith("batch=")).toSet
-      assert(parts == Set("batch=0"), s"empty batch must not mint a store partition: $parts")
-      // and a later batch still dedups against the intact store
-      sink(Seq((5L, "the quick brown fox jumps over the lazy dog tonight"))
-        .toDF("doc_id", "text"), 2L)
-      assert(snapEq(metrics.snapshot, "dedup_dups", 1L))
-    } finally metrics.close()
+    val metrics = new graft.streaming.ServiceMetrics
+    val storeDir = tmp("dde-store")
+    val sink = DedupStream.sinkBatch(storeDir, tmp("dde-out"),
+      metrics = Some(metrics)) _
+    sink(Seq((1L, "the quick brown fox jumps over the lazy dog tonight"))
+      .toDF("doc_id", "text"), 0L)
+    // an empty trigger: its observed verdict counts are zeros, not
+    // nulls, and the store must not gain a fileless partition
+    sink(Seq.empty[(Long, String)].toDF("doc_id", "text"), 1L)
+    val snap = metrics.snapshot
+    assert(snap("dedup_batches") == 2L && snap("dedup_uniques") == 1L &&
+      snap("dedup_dups") == 0L, s"got $snap")
+    val parts = new java.io.File(s"$storeDir/bands").listFiles()
+      .map(_.getName).filter(_.startsWith("batch=")).toSet
+    assert(parts == Set("batch=0"), s"empty batch must not mint a store partition: $parts")
+    // and a later batch still dedups against the intact store
+    sink(Seq((5L, "the quick brown fox jumps over the lazy dog tonight"))
+      .toDF("doc_id", "text"), 2L)
+    assert(snapEq(metrics.snapshot, "dedup_dups", 1L))
   }
 
   private def snapEq(m: Map[String, Long], k: String, v: Long): Boolean = m(k) == v
@@ -256,38 +152,32 @@ class DedupStreamSpec extends SparkSpec {
     import spark.implicits._
     val tA = "the quick brown fox jumps over the lazy dog tonight"
     val tC = "completely different words live in this third document here"
-    val metrics = new graft.streaming.ServiceMetrics(spark)
-    try {
-      val storeDir = tmp("ddm-store")
-      val sink = DedupStream.sinkBatch(storeDir, tmp("ddm-out"),
-        metrics = Some(metrics)) _
-      sink(Seq((1L, tA), (2L, tC)).toDF("doc_id", "text"), 0L)
-      sink(Seq((3L, tA),
-        (4L, "entirely novel content about streaming joins and watermark state"))
-        .toDF("doc_id", "text"), 1L)
-      val snap = metrics.snapshot
-      assert(snap("dedup_batches") == 2L, s"got $snap")
-      assert(snap("dedup_uniques") == 3L, s"1, 2, 4 are unique: $snap")
-      assert(snap("dedup_dups") == 1L, s"3 dups against 1: $snap")
-      val storeRows = spark.read.parquet(s"$storeDir/bands").count()
-      assert(snap("dedup_store_rows") == storeRows,
-        s"store-rows counter must match the written band rows ($storeRows): $snap")
-    } finally metrics.close()
+    val metrics = new graft.streaming.ServiceMetrics
+    val storeDir = tmp("ddm-store")
+    val sink = DedupStream.sinkBatch(storeDir, tmp("ddm-out"),
+      metrics = Some(metrics)) _
+    sink(Seq((1L, tA), (2L, tC)).toDF("doc_id", "text"), 0L)
+    sink(Seq((3L, tA),
+      (4L, "entirely novel content about streaming joins and watermark state"))
+      .toDF("doc_id", "text"), 1L)
+    val snap = metrics.snapshot
+    assert(snap("dedup_batches") == 2L, s"got $snap")
+    assert(snap("dedup_uniques") == 3L, s"1, 2, 4 are unique: $snap")
+    assert(snap("dedup_dups") == 1L, s"3 dups against 1: $snap")
+    val storeRows = spark.read.parquet(s"$storeDir/bands").count()
+    assert(snap("dedup_store_rows") == storeRows,
+      s"store-rows counter must match the written band rows ($storeRows): $snap")
   }
 
-  test("randomized interleavings: compaction + replay never change results or store (10 seeds)") {
+  test("randomized interleavings: replay never changes results or store (10 seeds)") {
     // the r16 plan's streaming-store industrialization, dedup side.
     // Results here legitimately depend on BATCH BOUNDARIES (prior docs
     // match any id, within-batch only smaller ids — ingestion order
     // wins), so the oracle is a RUN-VS-RUN differential: the same
     // random corpus through the same random trigger schedule, once
-    // plainly (run A) and once with checkpoint-recovery replays and
-    // mid-stream compactions injected (run B). Per-batch verdicts and
-    // the final canonical store must be identical — in particular a
-    // batch replayed AFTER a compaction folded its own rows into the
-    // consolidated partition must still be idempotent (its uniques are
-    // now prior targets; symmetric similarity + the self-match filter
-    // make that unobservable, which this test pins).
+    // plainly (run A) and once with checkpoint-recovery replays
+    // injected (run B). Per-batch verdicts and the final canonical
+    // store must be identical.
     import spark.implicits._
     val vocab = (0 until 40).map(i => s"w$i")
     (1 to 10).foreach { seedI =>
@@ -335,15 +225,10 @@ class DedupStreamSpec extends SparkSpec {
       batches.zipWithIndex.foreach { case (batch, bi) =>
         val bdf = batch.toDF("doc_id", "text")
         DedupStream.sinkBatch(storeA, outA)(bdf, bi.toLong)
-        // run B: random compaction BEFORE the batch, replay AFTER it
-        if (bi > 0 && rnd.nextInt(3) == 0)
-          DedupStream.compact(spark, storeB, upTo = bi.toLong)
+        // run B: a checkpoint-recovery replay of the same id AFTER it
         DedupStream.sinkBatch(storeB, outB)(bdf, bi.toLong)
-        if (rnd.nextInt(3) == 0) {
-          if (rnd.nextBoolean()) // compact FIRST, then replay the same id
-            DedupStream.compact(spark, storeB, upTo = bi.toLong + 1)
+        if (rnd.nextInt(3) == 0)
           DedupStream.sinkBatch(storeB, outB)(bdf, bi.toLong)
-        }
         val (va, vb) = (verdicts(outA, bi.toLong), verdicts(outB, bi.toLong))
         assert(va == vb,
           s"seed $seedI batch $bi: verdicts diverged\n A: $va\n B: $vb")

@@ -252,7 +252,7 @@ class FirehoseEndpointSpec extends SparkSpec {
         json + ("Content-Encoding" -> "gzip", "X-Amz-Firehose-Request-Id" -> "fh-gzip"))
       assert(s1 == 200 && s2 == 200)
 
-      val q = Pipeline.run(SourceConfig.fileDrop(dropDir).open(spark),
+      val q = Pipeline.run(SourceConfig.fileDrop(spark, dropDir),
         outDir, tmp("fh-e2e-ckpt"), trigger = Trigger.AvailableNow())
       try q.processAllAvailable() finally q.stop()
 
@@ -300,7 +300,7 @@ class FirehoseEndpointSpec extends SparkSpec {
       // each record through the spool and the sink prefixes "Basic "
       // (reference main.go:414)
       val q = Pipeline.run(
-        SourceConfig.fileDrop(dropDir).open(spark),
+        SourceConfig.fileDrop(spark, dropDir),
         tmp("fh-s6-out"), tmp("fh-s6-ckpt"),
         bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow())
@@ -331,7 +331,7 @@ class FirehoseEndpointSpec extends SparkSpec {
     // Serve's wiring: the endpoint signals the clock the stream waits on
     val clock = new ArrivalClock
     val ep = new FirehoseEndpoint(dropDir, onLanded = () => clock.signal())
-    val q = Pipeline.run(SourceConfig.fileDrop(dropDir).open(spark),
+    val q = Pipeline.run(SourceConfig.fileDrop(spark, dropDir),
       tmp("fh-wake-out"), tmp("fh-wake-ckpt"),
       bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
       trigger = Trigger.ProcessingTime("10 minutes"), clock = clock)
@@ -386,7 +386,7 @@ class FirehoseEndpointSpec extends SparkSpec {
         envelope("r3", 3L, b64(cwBody("tc"))).getBytes(UTF_8), json)
       assert(s1 == 200 && s2 == 200 && s3 == 200)
       val q = Pipeline.run(
-        SourceConfig.fileDrop(dropDir).open(spark),
+        SourceConfig.fileDrop(spark, dropDir),
         tmp("fh-iso-out"), tmp("fh-iso-ckpt"),
         bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow())
@@ -432,7 +432,7 @@ class FirehoseEndpointSpec extends SparkSpec {
     val bulkUrl = s"http://127.0.0.1:${bulk.getAddress.getPort}/_bulk"
 
     val dropDir = tmp("fh-met-drop")
-    val metrics = new ServiceMetrics(spark)
+    val metrics = new ServiceMetrics
     val ep = new FirehoseEndpoint(dropDir, extraMetrics = () => metrics.snapshot)
     // channel totals must ride the writes, never separate count() or
     // isEmpty jobs per trigger — record every action (name, output
@@ -459,7 +459,7 @@ class FirehoseEndpointSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     // earlier suites' action events must not reach the recorders
-    org.apache.spark.sql.graftshim.Bridge.flushListenerBus(spark)
+    org.apache.spark.sql.graftshim.ListenerBus.flush(spark)
     spark.listenerManager.register(recorder)
     spark.sparkContext.addSparkListener(jobCounter)
     val out = tmp("fh-met-out")
@@ -475,7 +475,7 @@ class FirehoseEndpointSpec extends SparkSpec {
         envelope("r3", 3L, b64(cwBody("ok"))).getBytes(UTF_8), json)
       assert(s1 == 200 && s2 == 400 && s3 == 200)
       val q = Pipeline.run(
-        SourceConfig.fileDrop(dropDir, maxFilesPerTrigger = 1).open(spark),
+        SourceConfig.fileDrop(spark, dropDir, maxFilesPerTrigger = 1),
         out, tmp("fh-met-ckpt"),
         bulk = Some(HttpBulk.Target(bulkUrl, "graft-docs")),
         trigger = Trigger.AvailableNow(), metrics = Some(metrics))
@@ -523,7 +523,7 @@ class FirehoseEndpointSpec extends SparkSpec {
       // of the rejected items) and one SUCCESS write; ERROR only for
       // the batch with a dead letter, ERROR_ITEMS only for the batch
       // whose items the stub rejected
-      org.apache.spark.sql.graftshim.Bridge.flushListenerBus(spark)
+      org.apache.spark.sql.graftshim.ListenerBus.flush(spark)
       val seen = actions.toArray(Array.empty[(String, String)]).toSeq
       val funcs = seen.map(_._1)
       assert(!funcs.contains("count") && !funcs.contains("isEmpty"),
@@ -548,7 +548,6 @@ class FirehoseEndpointSpec extends SparkSpec {
       ep.stop(); bulk.stop(0)
       spark.listenerManager.unregister(recorder)
       spark.sparkContext.removeSparkListener(jobCounter)
-      metrics.close() // don't leak the harvest listener onto later tests
     }
   }
 
@@ -563,7 +562,7 @@ class FirehoseEndpointSpec extends SparkSpec {
     }
     def runOnce(): Unit = {
       val q = Pipeline.run(
-        SourceConfig.fileDrop(dropDir, cleanSource = Some("delete")).open(spark),
+        SourceConfig.fileDrop(spark, dropDir, cleanSource = Some("delete")),
         outDir, ckpt, trigger = Trigger.AvailableNow())
       try q.processAllAvailable() finally q.stop()
     }

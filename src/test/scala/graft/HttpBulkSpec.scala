@@ -374,7 +374,7 @@ class HttpBulkSpec extends SparkSpec with TimeLimits {
           s"""{"id":"$id-$i","timestamp":$i,"message":"m"}""").mkString(",")}]}""".stripMargin
       val in = MemoryStream[(Long, Long, String)]
       val out = tmp("counts-out")
-      val m = new graft.streaming.ServiceMetrics(spark)
+      val m = new graft.streaming.ServiceMetrics
       val q = Pipeline.run(
         in.toDF().toDF("event_id", "batch_ms", "data"), out, tmp("counts-ckpt"),
         trigger = Trigger.ProcessingTime(0L), metrics = Some(m))
@@ -385,7 +385,7 @@ class HttpBulkSpec extends SparkSpec with TimeLimits {
         q.processAllAvailable()
         in.addData((3L, 20L, b64(body("b", 3))))
         q.processAllAvailable()
-      } finally { q.stop(); m.close() }
+      } finally q.stop()
       assert((m.batchesTotal.get, m.documentsIndexed.get, m.documentsDeadLettered.get) == ((2L, 5L, 1L)),
         s"counts: ${m.snapshot}")
       assert(spark.read.parquet(s"$out/SUCCESS").count() == 5)

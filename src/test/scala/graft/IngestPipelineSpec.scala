@@ -173,7 +173,7 @@ class IngestPipelineSpec extends SparkSpec {
       assert(post(s"${ep.url}/firehose", env) == 200)
 
       val q = Pipeline.run(
-        SourceConfig.fileDrop(dropDir).open(spark),
+        SourceConfig.fileDrop(spark, dropDir),
         tmp("ing-out"), tmp("ing-ckpt"),
         bulk = Some(HttpBulk.Target(
           s"http://127.0.0.1:${bulk.getAddress.getPort}/_bulk", "graft-docs",

@@ -6,11 +6,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{FirehoseEndpoint, HttpBulk, Pipeline, SourceConfig}
+import graft.ops.StreamOps
+import graft.streaming.{FirehoseEndpoint, HttpBulk, Pipeline, Serve, ServiceMetrics, SourceConfig}
 
-/** Structured Streaming semantics through MemoryStream: watermarked
-  * tumbling aggregation (late-data drop), replay dedup, the SUCCESS/ERROR
-  * dead-letter channel split, and the retry/backoff sink envelope
+/** Structured Streaming semantics through MemoryStream: the stateful
+  * StreamOps transforms (sessionize, throttle, attribution join: state
+  * expiry and late-data drop), the SUCCESS/ERROR dead-letter channel
+  * split, the alerting stage, and the retry/backoff sink envelope
   * (reference main.go:399–451; cloudformation-template.yaml:160–171). */
 class StreamingSpec extends SparkSpec {
 
@@ -19,98 +21,12 @@ class StreamingSpec extends SparkSpec {
 
   private val H = 3600L * 1000 // one hour in ms
 
-  test("tumbling agg with watermark finalizes windows and drops late data") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val agg = Pipeline.tumblingCounts(
-      in.toDF().toDF("event_ms", "logGroup")
-        .withColumn("event_id", lit(0L)).withColumn("batch_ms", lit(0L))
-        .withColumn("logStream", lit("s")).withColumn("event_ref", lit("r"))
-        .withColumn("message", lit("m")))
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("tumbling_test").start()
-    try {
-      // two events in hour-0, then an hour-2 event that advances the
-      // watermark past hour-0's close → hour-0 window emits
-      in.addData((10 * 60000L, "/app/a"), (20 * 60000L, "/app/a"))
-      q.processAllAvailable()
-      in.addData((2 * H + 10 * 60000L, "/app/a"))
-      q.processAllAvailable()
-      val afterClose = spark.table("tumbling_test")
-        .filter(col("window_start") === timestamp_millis(lit(0L)))
-        .select("n").as[Long].collect()
-      assert(afterClose.toSeq == Seq(2L), "hour-0 window should emit n=2")
-
-      // a straggler behind the watermark must be dropped, not re-emitted
-      in.addData((30 * 60000L, "/app/a"))
-      q.processAllAvailable()
-      val afterLate = spark.table("tumbling_test")
-        .filter(col("window_start") === timestamp_millis(lit(0L)))
-        .select("n").as[Long].collect()
-      assert(afterLate.toSeq == Seq(2L), "late event must not change the closed window")
-    } finally q.stop()
-  }
-
-  test("hopping agg: each event lands in two windows; both close under the watermark") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val agg = Pipeline.hoppingCounts(
-      in.toDF().toDF("event_ms", "logGroup")
-        .withColumn("event_id", lit(0L)).withColumn("batch_ms", lit(0L))
-        .withColumn("logStream", lit("s")).withColumn("event_ref", lit("r"))
-        .withColumn("message", lit("m")))
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("hopping_test").start()
-    try {
-      // events at 0:10 and 0:40 → window [-0:30,0:30) sees one,
-      // [0:00,1:00) sees both, [0:30,1:30) sees one; an hour-3 event
-      // closes all of them
-      in.addData((10 * 60000L, "/app/a"), (40 * 60000L, "/app/a"))
-      q.processAllAvailable()
-      in.addData((3 * H + 10 * 60000L, "/app/a"))
-      q.processAllAvailable()
-      def nAt(startMs: Long): Seq[Long] = spark.table("hopping_test")
-        .filter(col("window_start") === timestamp_millis(lit(startMs)))
-        .select("n").as[Long].collect().toSeq
-      assert(nAt(-30 * 60000L) == Seq(1L), "[-0:30,0:30) should emit n=1")
-      assert(nAt(0L) == Seq(2L), "[0:00,1:00) should emit n=2")
-      assert(nAt(30 * 60000L) == Seq(1L), "[0:30,1:30) should emit n=1")
-      // a straggler behind the watermark changes neither of its windows
-      in.addData((20 * 60000L, "/app/a"))
-      q.processAllAvailable()
-      assert(nAt(0L) == Seq(2L), "late event must not re-open a closed window")
-    } finally q.stop()
-  }
-
-  test("replay dedup: redelivered event_refs emit once within the watermark") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(String, Long)]
-    val deduped = Pipeline.dedupReplays(
-      in.toDF().toDF("event_ref", "event_ms")
-        .withColumn("event_id", lit(0L)).withColumn("batch_ms", lit(0L))
-        .withColumn("logGroup", lit("g")).withColumn("logStream", lit("s"))
-        .withColumn("message", lit("m")))
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_test").start()
-    try {
-      in.addData(("e1", 1000L), ("e2", 2000L))
-      q.processAllAvailable()
-      in.addData(("e1", 1000L), ("e3", 3000L)) // e1 is a Firehose redelivery
-      q.processAllAvailable()
-      val refs = spark.table("dedup_test").select("event_ref").as[String].collect().sorted
-      assert(refs.toSeq == Seq("e1", "e2", "e3"))
-    } finally q.stop()
-  }
-
   test("stream-stream attribution join: in-window views match, out-of-window and late ones don't") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val views = MemoryStream[(Long, Long, Long)]    // user_id, view_id, view_ms
     val purchases = MemoryStream[(Long, Long, Long)] // user_id, purchase_id, purchase_ms
-    val joined = Pipeline.attributeJoin(
+    val joined = StreamOps.attributeJoin(
       views.toDF().toDF("user_id", "view_id", "view_ms"),
       purchases.toDF().toDF("user_id", "purchase_id", "purchase_ms"),
       windowMinutes = 30)
@@ -148,7 +64,7 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val views = MemoryStream[(Long, Long, Long)]
     val purchases = MemoryStream[(Long, Long, Long)]
-    val joined = Pipeline.attributeJoin(
+    val joined = StreamOps.attributeJoin(
       views.toDF().toDF("user_id", "view_id", "view_ms"),
       purchases.toDF().toDF("user_id", "purchase_id", "purchase_ms"),
       windowMinutes = 30, joinType = "left_outer")
@@ -208,7 +124,7 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Long)]
     val gapMs = 30 * 60000L
-    val sessions = Pipeline.sessionize(
+    val sessions = StreamOps.sessionize(
       in.toDF().toDF("logStream", "event_ms")
         .withColumn("event_id", lit(0L)).withColumn("batch_ms", lit(0L))
         .withColumn("logGroup", lit("g")).withColumn("event_ref", lit("r"))
@@ -226,17 +142,17 @@ class StreamingSpec extends SparkSpec {
       in.addData(("A", 3 * H))
       q.processAllAvailable()
       val afterGap = spark.table("session_test")
-        .as[Pipeline.SessionClosed].collect()
-      assert(afterGap.toSeq == Seq(Pipeline.SessionClosed("A", H, H + 60000L, 2, "gap")))
+        .as[StreamOps.SessionClosed].collect()
+      assert(afterGap.toSeq == Seq(StreamOps.SessionClosed("A", H, H + 60000L, 2, "gap")))
       // stream B at t=5h advances the watermark (5h − 10min) far past
       // A's timeout (3h + 30min) → A's open session closes by timeout
       in.addData(("B", 5 * H))
       q.processAllAvailable()
       val afterTimeout = spark.table("session_test")
-        .as[Pipeline.SessionClosed].collect().sortBy(_.startMs)
+        .as[StreamOps.SessionClosed].collect().sortBy(_.startMs)
       assert(afterTimeout.toSeq == Seq(
-        Pipeline.SessionClosed("A", H, H + 60000L, 2, "gap"),
-        Pipeline.SessionClosed("A", 3 * H, 3 * H, 1, "timeout")))
+        StreamOps.SessionClosed("A", H, H + 60000L, 2, "gap"),
+        StreamOps.SessionClosed("A", 3 * H, 3 * H, 1, "timeout")))
     } finally q.stop()
   }
 
@@ -244,7 +160,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Long, Long)] // (stream, event_ms, seq)
-    val decisions = Pipeline.throttle(
+    val decisions = StreamOps.throttle(
       in.toDF().toDF("logStream", "event_ms", "seq"),
       windowMs = H, maxPerWindow = 2L)
     val q = decisions.writeStream.outputMode("append")
@@ -259,13 +175,13 @@ class StreamingSpec extends SparkSpec {
       in.addData(("A", H + 3000L, 3L), ("B", H + 1000L, 4L), ("A", 2 * H + 500L, 5L))
       q.processAllAvailable()
       val got = spark.table("throttle_test")
-        .as[Pipeline.ThrottleOut].collect().sortBy(_.seq)
+        .as[StreamOps.ThrottleOut].collect().sortBy(_.seq)
       assert(got.toSeq == Seq(
-        Pipeline.ThrottleOut("A", H, 1L, H + 1000L, admitted = true),
-        Pipeline.ThrottleOut("A", H, 2L, H + 2000L, admitted = true),
-        Pipeline.ThrottleOut("A", H, 3L, H + 3000L, admitted = false),
-        Pipeline.ThrottleOut("B", H, 4L, H + 1000L, admitted = true),
-        Pipeline.ThrottleOut("A", 2 * H, 5L, 2 * H + 500L, admitted = true)),
+        StreamOps.ThrottleOut("A", H, 1L, H + 1000L, admitted = true),
+        StreamOps.ThrottleOut("A", H, 2L, H + 2000L, admitted = true),
+        StreamOps.ThrottleOut("A", H, 3L, H + 3000L, admitted = false),
+        StreamOps.ThrottleOut("B", H, 4L, H + 1000L, admitted = true),
+        StreamOps.ThrottleOut("A", 2 * H, 5L, 2 * H + 500L, admitted = true)),
         s"got: ${got.mkString(",")}")
     } finally q.stop()
   }
@@ -274,7 +190,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(String, Long, Long)]
-    val decisions = Pipeline.throttle(
+    val decisions = StreamOps.throttle(
       in.toDF().toDF("logStream", "event_ms", "seq"),
       windowMs = H, maxPerWindow = 2L)
     val q = decisions.writeStream.outputMode("append")
@@ -298,7 +214,7 @@ class StreamingSpec extends SparkSpec {
       in.addData(("B", 20 * H + 2000L, 5L), ("B", 20 * H + 3000L, 6L))
       q.processAllAvailable()
       val admitted = spark.table("throttle_timeout_test")
-        .as[Pipeline.ThrottleOut].collect().filter(o => o.stream == "B" && o.window_ms == 20 * H)
+        .as[StreamOps.ThrottleOut].collect().filter(o => o.stream == "B" && o.window_ms == 20 * H)
       assert(admitted.count(_.admitted) == 2 && admitted.count(!_.admitted) == 2,
         s"got: ${admitted.mkString(",")}")
     } finally q.stop()
@@ -317,7 +233,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val in = MemoryStream[(String, Long)]
       val gapMs = 30 * 60000L
-      val sessions = Pipeline.sessionize(
+      val sessions = StreamOps.sessionize(
         in.toDF().toDF("logStream", "event_ms")
           .withColumn("event_id", lit(0L)).withColumn("batch_ms", lit(0L))
           .withColumn("logGroup", lit("g")).withColumn("event_ref", lit("r"))
@@ -331,8 +247,8 @@ class StreamingSpec extends SparkSpec {
         in.addData(("A", 3 * H)) // beyond the gap → closes session 1
         q.processAllAvailable()
         val closed = spark.table("rocksdb_session_test")
-          .as[Pipeline.SessionClosed].collect()
-        assert(closed.toSeq == Seq(Pipeline.SessionClosed("A", H, H + 60000L, 2, "gap")),
+          .as[StreamOps.SessionClosed].collect()
+        assert(closed.toSeq == Seq(StreamOps.SessionClosed("A", H, H + 60000L, 2, "gap")),
           "sessionize semantics must be provider-independent")
         // the provider actually engaged: RocksDB custom metrics on the
         // state operator, not just a conf set
@@ -354,7 +270,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, 10L, "/app/a", "s1", "e1-0", 1000L, """{"k":1}"""))
       .toDF("event_id", "batch_ms", "logGroup", "logStream", "event_ref", "event_ms", "message")
-    val lines = Pipeline.toBulkNdjsonKeyed(docs, "graft-docs").select("lines").as[String].collect()
+    val lines = HttpBulk.toBulkNdjsonKeyed(docs, "graft-docs").select("lines").as[String].collect()
     assert(lines.length == 1)
     val Array(action, source) = lines.head.split("\n")
     assert(action == """{"index":{"_index":"graft-docs","_id":"e1-0"}}""")
@@ -449,7 +365,7 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(Long, Long, String)]
     val outDir = tmp("graft-alert-sink")
     in.addData((1L, 10L, b64(body)))
-    val m = new graft.streaming.ServiceMetrics(spark)
+    val m = new ServiceMetrics
     val q = Pipeline.run(
       in.toDF().toDF("event_id", "batch_ms", "data"),
       outDir, tmp("graft-alert-ckpt"), trigger = Trigger.AvailableNow(),
@@ -469,7 +385,7 @@ class StreamingSpec extends SparkSpec {
       // the match count rides the ALERTS write into /metrics
       assert(m.snapshot("alerts_matched") == 4L,
         s"alerts_matched wrong: ${m.snapshot}")
-    } finally { q.stop(); m.close() }
+    } finally q.stop()
   }
 
   test("end-to-end stream with the real gzip wire encoding (base64(gzip(body)))") {
@@ -577,7 +493,7 @@ class StreamingSpec extends SparkSpec {
     Files.writeString(java.nio.file.Paths.get(dropDir, "batch-0001.json"),
       s"""{"event_id":1,"batch_ms":10,"data":"$b64"}""")
     val outDir = tmp("graft-drop-sink")
-    val q = Pipeline.run(SourceConfig.fileDrop(dropDir).open(spark),
+    val q = Pipeline.run(SourceConfig.fileDrop(spark, dropDir),
       outDir, tmp("graft-drop-ckpt"), trigger = Trigger.AvailableNow())
     try {
       q.processAllAvailable()
@@ -596,42 +512,18 @@ class StreamingSpec extends SparkSpec {
     val dropDir = tmp("graft-seam")
     Files.writeString(java.nio.file.Paths.get(dropDir, "batch-0001.json"),
       s"""{"event_id":1,"batch_ms":10,"data":"$b64","request_id":"rq-s","access_key":""}""")
-    // a Kinesis connector would differ ONLY in this value: its format()
-    // and options mapped onto the same envelope schema
-    val seam = SourceConfig.fileDrop(dropDir)
+    // a Kinesis connector would differ ONLY in this frame: its
+    // readStream selected onto the same envelope schema
+    val seam = SourceConfig.fileDrop(spark, dropDir)
     assert(seam.schema == SourceConfig.schema)
     val outDir = tmp("graft-seam-sink")
-    val q = Pipeline.run(seam.open(spark), outDir, tmp("graft-seam-ckpt"),
+    val q = Pipeline.run(seam, outDir, tmp("graft-seam-ckpt"),
       trigger = Trigger.AvailableNow())
     try {
       q.processAllAvailable()
       val ok = spark.read.parquet(s"$outDir/SUCCESS")
       assert(ok.select("event_ref").as[String].collect().toSeq == Seq("sc1"))
       assert(ok.select("requestId").as[String].collect().toSeq == Seq("rq-s"))
-    } finally q.stop()
-  }
-
-  test("pluggable source seam: the rate-source adapter drives the same topology unchanged") {
-    import spark.implicits._
-    // Spark's rate-micro-batch source has its OWN schema (timestamp,
-    // value) — the adapter maps it onto the envelope contract and the
-    // SAME Pipeline.run topology consumes it with zero topology edits:
-    // the portability claim of the seam, demonstrated on a second real
-    // format() rather than asserted
-    val seam = SourceConfig.rateEnvelope(rowsPerBatch = 5)
-    val outDir = tmp("graft-rate-sink")
-    val q = Pipeline.run(seam.open(spark), outDir, tmp("graft-rate-ckpt"),
-      trigger = Trigger.AvailableNow())
-    try {
-      q.processAllAvailable()
-      val ok = spark.read.parquet(s"$outDir/SUCCESS")
-      val refs = ok.select("event_ref").as[String].collect().sorted
-      assert(refs.length == 5 && refs.forall(_.startsWith("r")),
-        s"five generated events must decode end-to-end, got ${refs.toSeq}")
-      assert(ok.select("logGroup").distinct().as[String].collect().toSeq == Seq("/app/rate"))
-      assert(ok.select("requestId").distinct().as[String].collect().toSeq == Seq("rate"))
-      // nothing dead-letters: the adapter emits only well-formed envelopes
-      assert(!Files.exists(java.nio.file.Paths.get(outDir, "ERROR")))
     } finally q.stop()
   }
 
@@ -702,7 +594,7 @@ class StreamingSpec extends SparkSpec {
       assert(row == (("1.2", "C-X", "d.example.com", "d.example.com")),
         s"variant-path enrichment mismatch: $row")
       // …and the wire lines carry the raw message, never the twin
-      val line = Pipeline.toBulkNdjsonKeyed(ok, "idx").select("lines").as[String].head()
+      val line = HttpBulk.toBulkNdjsonKeyed(ok, "idx").select("lines").as[String].head()
       assert(!line.contains("message_v"),
         s"the variant twin leaked into the bulk source line: $line")
       // the raw message string rides the wire (JSON-escaped inside the
@@ -814,5 +706,50 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 2, "replay must not duplicate rows")
     write(docs, 8L, true) // a NEW batch does append to the channel
     assert(spark.read.parquet(dir).count() == 4)
+  }
+
+  test("SPARK_GRAFT_ALERTS: one conjunctive rule per clause, one ALERTS row per (doc, id)") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val queries = Serve.alertQueries("1:spark,join;2: slow ")
+    assert(queries == Seq(1L -> "(spark) AND (join)", 2L -> "(slow)"), s"got $queries")
+    val repeated = intercept[IllegalArgumentException](Serve.alertQueries("1:spark;1:join"))
+    assert(repeated.getMessage.contains("SPARK_GRAFT_ALERTS") && repeated.getMessage.contains("1"),
+      repeated.getMessage)
+    // e1 holds only one of rule 1's words; e2 holds both, and slow
+    val body =
+      """{"messageType":"DATA_MESSAGE","owner":"1","logGroup":"/app/a","logStream":"s1",
+        |"subscriptionFilters":["f"],"logEvents":[
+        |{"id":"e1","timestamp":1000,"message":"spark only here"},
+        |{"id":"e2","timestamp":2000,"message":"a slow spark join pipeline"}]}""".stripMargin
+    val in = MemoryStream[(Long, Long, String)]
+    val outDir = tmp("graft-alert-clause-sink")
+    in.addData((1L, 10L, java.util.Base64.getEncoder.encodeToString(body.getBytes("UTF-8"))))
+    val m = new ServiceMetrics
+    val q = Pipeline.run(
+      in.toDF().toDF("event_id", "batch_ms", "data"),
+      outDir, tmp("graft-alert-clause-ckpt"), trigger = Trigger.AvailableNow(),
+      metrics = Some(m), alertQueries = Some(queries))
+    try {
+      q.processAllAvailable()
+      val rows = spark.read.parquet(s"$outDir/ALERTS")
+        .select(col("doc_id"), col("query_id")).as[(String, Long)].collect().toSeq
+      assert(rows.sorted == Seq(("1/e2", 1L), ("1/e2", 2L)), s"wrong alert rows: $rows")
+      assert(m.alertsMatched.get == 2L, s"alerts_matched wrong: ${m.snapshot}")
+    } finally q.stop()
+  }
+
+  test("merge is associative: any batch split folds to the one-shot partial") {
+    import spark.implicits._
+    val all = Seq((1L, "a", 1L, 1L), (1L, "b", 2L, 5L), (2L, "c", 3L, 3L),
+      (2L, "d", 4L, 2L), (3L, "e", 5L, 4L))
+      .toDF("user_id", "event_type", "vc", "ok")
+    val oneShot = StreamOps.partial(all).orderBy("user_id").collect().toSeq
+    for (m <- 2 to 3) {
+      val parts = (0 until m).map(i => all.filter(col("ok") % m === i))
+      val folded = parts.map(StreamOps.partial).reduce(StreamOps.merge)
+        .orderBy("user_id").collect().toSeq
+      assert(folded == oneShot, s"fold of $m parts diverged")
+    }
   }
 }
