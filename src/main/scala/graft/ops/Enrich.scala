@@ -1505,11 +1505,12 @@ object Enrich {
     * with null enrichment. The oracle computes each processor's CLOSED
     * FORM from the base columns (the per-processor oracles verify the
     * mechanics; this one verifies the composition — routing, guard
-    * chaining, and the left geoip join's null propagation).
+    * chaining, and the geoip lookup's null propagation on a miss).
     *
-    * Plan shape: ONE projection pass + ONE broadcast hash equi-join
-    * (bucketed geoip) — per-document cost identical at 1 or 1000
-    * executors; nothing shuffles. */
+    * Plan shape: ONE projection pass, geoip included — a binary search
+    * in the broadcast range table (GeoLookup), no join and no exchange;
+    * per-document cost identical at 1 or 1000 executors; nothing
+    * shuffles. */
   val ingestPipelineOp = QueryDef(
     "np_ingest_pipeline", {
       (s, dir) =>

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expr.GeoLookupFunctions.geo_lookup
+import graft.expr.GeoTable
 import graft.expr.GrokFunctions.regexp_extract_struct
 import graft.ops.Enrich
 
@@ -19,9 +24,12 @@ import graft.ops.Enrich
   * under `ignore_failure` (an unenrichable document still indexes).
   *
   * Spark-first re-expression: the whole chain is ONE projection pass of
-  * column expressions plus ONE broadcast left hash join for geoip — no
-  * shuffle, no state; per-document cost identical at 1 executor or
-  * 1000. Each processor guards on its own input exactly like the ES
+  * column expressions, geoip included — a binary search in a broadcast
+  * range table (GeoLookup), not a join — so no shuffle, no exchange, no
+  * state; per-document cost identical at 1 executor or 1000. It is
+  * built as one projection per dependency level (8 in all), which
+  * Catalyst collapses into the one pass. Each processor guards on its
+  * own input exactly like the ES
   * `if`/`ignore_missing`/`ignore_failure` contract, so a non-axway or
   * non-matching document passes through with null enrichment fields
   * (which the `_bulk` serializer then drops — P14's null-strip is
@@ -34,10 +42,6 @@ import graft.ops.Enrich
   * organization_name, tls.version → tls_version, …
   */
 object IngestPipeline {
-
-  /** 2^16-wide ip buckets for the geoip equi-join (the production range
-    * join shape — see Enrich.geoipBucketedOp's scaladoc). */
-  val bucketWidth: Long = 65536L
 
   private val httpdateFmt = "dd/MMM/yyyy:HH:mm:ss Z"
 
@@ -74,63 +78,123 @@ object IngestPipeline {
       .withColumn("n_pii", graft.ops.TextOps.piiCount(col("message")))
       .withColumn("message", graft.ops.TextOps.piiScrubbed(col("message")))
 
+  /** The enriched columns after the input's, in output order. */
+  private val added = Seq("pipeline", "message_v", "source_address", "user_name",
+    "http_method", "http_version", "status_code", "body_bytes", "response_ms",
+    "url_original", "url_path", "url_query", "url_ext", "url_domain",
+    "event_kind", "event_category", "event_outcome", "source_ip", "source_domain",
+    "event_created_ms", "tls_cipher", "tls_version", "tls_version_protocol",
+    "geo_country", "as_number", "organization_name")
+
   /** Apply one-pipeline-to-rule-them-all + axway-ingest to a flattened
     * documents frame (Pipeline.flatten's schema: event_id, batch_ms,
     * requestId, logGroup, logStream, event_ref, event_ms, message).
+    * This is `enricher(geoDim)(docs)`, so it collects the dim on every
+    * call; a caller that enriches many frames (Serve) builds one
+    * enricher.
+    */
+  def enrich(docs: DataFrame, geoDim: Option[DataFrame] = None): DataFrame =
+    enricher(geoDim)(docs)
+
+  /** The enrich stage for one geoip dim. The dim is collected here, once,
+    * into a sorted range table held in one Spark `Broadcast`; each
+    * document's geoip is then a binary search inside the projection
+    * (GeoLookup), so the stage adds no join, no broadcast exchange and
+    * no job to the plans it builds. The dim must fit the driver.
     *
     * `geoDim` columns: ip_start, ip_end (long, inclusive), geo_country,
-    * as_number, organization_name. The dim is exploded once per spanned
-    * 2^16 bucket and broadcast — a plain hash equi-join on the bucket
-    * with the range check residual, never a per-row scan of the range
-    * table (the shape that survives a 3M-range GeoLite2 table).
+    * as_number, organization_name. Rows with a null bound can match no
+    * address and are skipped; a range with ip_start > ip_end, or two
+    * ranges that overlap, fail here (GeoTable).
     */
-  def enrich(docs: DataFrame, geoDim: Option[DataFrame] = None): DataFrame = {
-    val isAxway = col("logGroup").rlike("axway")
+  def enricher(geoDim: Option[DataFrame]): DataFrame => DataFrame = {
+    val table = geoDim.map { dim =>
+      val rows = dim.where(col("ip_start").isNotNull && col("ip_end").isNotNull)
+        .select(col("ip_start").cast("long"), col("ip_end").cast("long"),
+          col("geo_country").cast("string"), col("as_number").cast("long"),
+          col("organization_name").cast("string"))
+        .collect()
+      dim.sparkSession.sparkContext.broadcast(GeoTable(rows.toSeq))
+    }
+    docs => staged(docs, table)
+  }
 
+  /** The processor chain as one projection per dependency level, 8 in
+    * all: each Dataset step re-analyses the plan it grows, so the chain
+    * is built level by level, not column by column. A level's columns
+    * read only the levels before it; a name the input already has
+    * (event_ms) is replaced in place. The last level also fixes the
+    * output order (`added`) and drops the helper columns. */
+  private def staged(docs: DataFrame, geo: Option[Broadcast[GeoTable]]): DataFrame = {
+    def level(df: DataFrame, cols: (String, Column)*): DataFrame = df.withColumns(ListMap(cols: _*))
+    val isAxway = col("logGroup").rlike("axway")
+    def variant(path: String): Column = expr(s"try_variant_get(message_v, '$path', 'string')")
+    val g = col("_g")
+    def ifm(c: Column): Column = when(col("_m"), c)
+    val sslParts = split(col("_sslp"), "v")
+    val sslVer = element_at(sslParts, 2)
+
+    val routed = level(docs,
+      "pipeline" -> when(isAxway, "axway-ingest").otherwise("default"),
+      // SURVEY §1.3's "parse once vs re-parse per field", closed on the
+      // hot path: the open-content message binds ONCE to a VariantType
+      // value (the faithful mapping of the reference's json.RawMessage,
+      // elasticOutput.go:34) and every extraction below is a typed path
+      // access against the parsed binary encoding — where a
+      // get_json_object chain would re-run the string parser per field
+      // (4× per axway document). The column FLOWS THROUGH to the SUCCESS
+      // channel (variant round-trips parquet in Spark 4), so the
+      // indexed store keeps the open-content field typed; the bulk
+      // serializer excludes it (the raw `message` string is the wire
+      // field, HttpBulk.toBulkNdjsonKeyed).
+      "message_v" -> expr("try_parse_json(message)"))
     // P0 route (one-pipeline-to-rule-them-all.json:4–12) + P1 grok
     // (axway-ingest.json:4–12): the grok field is the MESSAGE's `.text`
     // — jsonOrText wrapped a plain access-log line as {"text": line},
     // and a JSON-object message has no .text, which is grok's
     // ignore_missing skip. No match → empty capture groups → every
     // dependent processor skips (the pipeline-level ignore_failure).
-    val g = col("_g")
-    val matched = col("_line").isNotNull && g.getField("remote_addr") =!= ""
-    def ifm(c: Column): Column = when(col("_m"), c)
-
-    val sslParts = split(col("_sslp"), "v")
-    val sslVer = element_at(sslParts, 2)
-
-    val projected = docs
-      .withColumn("pipeline", when(isAxway, "axway-ingest").otherwise("default"))
-      // SURVEY §1.3's "parse once vs re-parse per field", closed on the
-      // hot path: the open-content message binds ONCE to a VariantType
-      // value (the faithful mapping of the reference's json.RawMessage,
-      // elasticOutput.go:34) and every extraction below is a typed path
-      // access against the parsed binary encoding — where the previous
-      // get_json_object chain re-ran the string parser per field (4×
-      // per axway document). The column FLOWS THROUGH to the SUCCESS
-      // channel (variant round-trips parquet in Spark 4), so the
-      // indexed store keeps the open-content field typed; the bulk
-      // serializer excludes it (the raw `message` string is the wire
-      // field, HttpBulk.toBulkNdjsonKeyed).
-      .withColumn("message_v", expr("try_parse_json(message)"))
-      .withColumn("_line",
-        when(isAxway, expr("try_variant_get(message_v, '$.text', 'string')")))
-      .withColumn("_g", regexp_extract_struct(col("_line"), Enrich.grokRx, Enrich.grokGroups))
-      .withColumn("_m", matched)
+    val lined = level(routed, "_line" -> when(isAxway, variant("$.text")))
+    val grokked = level(lined,
+      "_g" -> regexp_extract_struct(col("_line"), Enrich.grokRx, Enrich.grokGroups))
+    val gated = level(grokked,
+      "_m" -> (col("_line").isNotNull && g.getField("remote_addr") =!= ""))
+    val fields = level(gated,
       // grokked http.* / source.address / user.name
-      .withColumn("source_address", ifm(g.getField("remote_addr")))
-      .withColumn("user_name", ifm(g.getField("user_name")))
-      .withColumn("http_method", ifm(g.getField("http_method")))
-      .withColumn("http_version", ifm(g.getField("http_version")))
-      .withColumn("status_code", ifm(g.getField("status_code").cast("long")))
-      .withColumn("body_bytes", ifm(g.getField("body_bytes").cast("long")))
-      .withColumn("response_ms", ifm(g.getField("response_ms").cast("long")))
+      "source_address" -> ifm(g.getField("remote_addr")),
+      "user_name" -> ifm(g.getField("user_name")),
+      "http_method" -> ifm(g.getField("http_method")),
+      "http_version" -> ifm(g.getField("http_version")),
+      "status_code" -> ifm(g.getField("status_code").cast("long")),
+      "body_bytes" -> ifm(g.getField("body_bytes").cast("long")),
+      "response_ms" -> ifm(g.getField("response_ms").cast("long")),
       // P2 uri_parts over the RELATIVE original url (axway-ingest.json:
       // 13–17) — path/query/extension; no host on a relative URL, so P3's
       // url.domain falls back to destination.domain when the document
       // carries one (axway-ingest.json:18–24)
-      .withColumn("url_original", ifm(g.getField("request_url")))
+      "url_original" -> ifm(g.getField("request_url")),
+      "url_domain" -> when(isAxway, nullif(variant("$.destination.domain"), lit(""))),
+      // P5 constants (axway-ingest.json:34–43): set unconditionally for
+      // every axway-routed document, matched or not
+      "event_kind" -> when(isAxway, "event"),
+      "event_category" -> when(isAxway, "web"),
+      // P8 event.created = pre-overwrite @timestamp (axway-ingest.json:
+      // 68–73) and P9 date parse REPLACING the event time, ignore_failure
+      // (axway-ingest.json:74–89): try_to_timestamp, never a throwing
+      // parse — a poison date must not fail the micro-batch. Both read
+      // the input's event_ms: one level's columns see only the levels
+      // before it
+      "event_created_ms" -> when(isAxway, col("event_ms")),
+      "event_ms" -> coalesce(
+        ifm(unix_millis(try_to_timestamp(
+          nullif(g.getField("http_date"), lit("")), lit(httpdateFmt)))),
+        col("event_ms")),
+      // P13 tls (axway-ingest.json:124–137): cipher copied if non-empty,
+      // version/protocol from the painless split-on-"v" script; both read
+      // apache.access.ssl.* off the DOCUMENT (a JSON message), not grok
+      "tls_cipher" -> when(isAxway, nullif(variant("$.apache.access.ssl.cipher"), lit(""))),
+      "_sslp" -> when(isAxway, lower(variant("$.apache.access.ssl.protocol"))))
+    val derived = level(fields,
       // path+query in ONE regex pass (r22): the optional group carries
       // its own $ anchor so a query that fails it (e.g. a newline past
       // the '?') leaves the group non-participating — "" — exactly what
@@ -141,73 +205,32 @@ object IngestPipeline {
       // gave url_query "d", the fused form gives null. It needs an
       // embedded newline plus a second '?', and null is the saner answer
       // for a multi-line url, so the fused form is kept.
-      .withColumn("_pq", regexp_extract_struct(col("url_original"),
-        "^([^?]*)(?:\\?(.*)$)?", Seq("path", "query")))
-      .withColumn("url_path", col("_pq.path"))
-      .withColumn("url_query", nullif(col("_pq.query"), lit("")))
-      .withColumn("url_ext", nullif(regexp_extract(col("url_path"), "\\.([a-z0-9]+)$", 1), lit("")))
-      .withColumn("url_domain",
-        when(isAxway, nullif(
-          expr("try_variant_get(message_v, '$.destination.domain', 'string')"), lit(""))))
-      // P5 constants (axway-ingest.json:34–43): set unconditionally for
-      // every axway-routed document, matched or not
-      .withColumn("event_kind", when(isAxway, "event"))
-      .withColumn("event_category", when(isAxway, "web"))
+      "_pq" -> regexp_extract_struct(col("url_original"),
+        "^([^?]*)(?:\\?(.*)$)?", Seq("path", "query")),
       // P6 outcome (axway-ingest.json:45–58)
-      .withColumn("event_outcome",
-        when(col("status_code") < 400, "success")
-          .when(col("status_code") > 399, "failure"))
+      "event_outcome" -> when(col("status_code") < 400, "success")
+        .when(col("status_code") > 399, "failure"),
       // P7 ip-vs-domain on source.address (axway-ingest.json:59–67)
-      .withColumn("source_ip",
-        when(col("source_address").rlike(Enrich.ipRx), col("source_address")))
-      .withColumn("source_domain",
-        when(col("source_address").isNotNull && !col("source_address").rlike(Enrich.ipRx),
-          col("source_address")))
-      // P8 event.created = pre-overwrite @timestamp (axway-ingest.json:
-      // 68–73) and P9 date parse REPLACING the event time, ignore_failure
-      // (axway-ingest.json:74–89): try_to_timestamp, never a throwing
-      // parse — a poison date must not fail the micro-batch
-      .withColumn("event_created_ms", when(isAxway, col("event_ms")))
-      .withColumn("event_ms",
-        coalesce(
-          ifm(unix_millis(try_to_timestamp(
-            nullif(g.getField("http_date"), lit("")), lit(httpdateFmt)))),
-          col("event_ms")))
-      // P13 tls (axway-ingest.json:124–137): cipher copied if non-empty,
-      // version/protocol from the painless split-on-"v" script; both read
-      // apache.access.ssl.* off the DOCUMENT (a JSON message), not grok
-      .withColumn("tls_cipher",
-        when(isAxway, nullif(
-          expr("try_variant_get(message_v, '$.apache.access.ssl.cipher', 'string')"), lit(""))))
-      .withColumn("_sslp",
-        when(isAxway, lower(
-          expr("try_variant_get(message_v, '$.apache.access.ssl.protocol', 'string')"))))
-      .withColumn("tls_version",
-        when(size(sslParts) === 2,
-          when(sslVer.contains("."), sslVer).otherwise(concat(sslVer, lit(".0")))))
-      .withColumn("tls_version_protocol", when(size(sslParts) === 2, element_at(sslParts, 1)))
-
-    // P10+P11 geoip (axway-ingest.json:90–123): broadcast bucketed range
-    // join on source.ip; LEFT join so unmatched / non-axway rows ride
-    // through with null geo attrs (geoip's ignore_missing)
-    val geoed = geoDim match {
-      case Some(dim) =>
-        val withIp = projected
-          .withColumn("_ip_long", ipToLong(col("source_ip")))
-          .withColumn("_fb", expr(s"_ip_long div $bucketWidth"))
-        val dimExp = dim.withColumn("_db",
-          explode(expr(s"sequence(ip_start div $bucketWidth, ip_end div $bucketWidth)")))
-        withIp.join(broadcast(dimExp),
-            col("_fb") === col("_db") &&
-              col("_ip_long") >= col("ip_start") && col("_ip_long") <= col("ip_end"),
-            "left")
-          .drop("ip_start", "ip_end", "_db", "_ip_long", "_fb")
-      case None =>
-        projected
-          .withColumn("geo_country", lit(null).cast("string"))
-          .withColumn("as_number", lit(null).cast("long"))
-          .withColumn("organization_name", lit(null).cast("string"))
-    }
-    geoed.drop("_line", "_g", "_m", "_sslp", "_pq")
+      "source_ip" -> when(col("source_address").rlike(Enrich.ipRx), col("source_address")),
+      "source_domain" -> when(col("source_address").isNotNull &&
+        !col("source_address").rlike(Enrich.ipRx), col("source_address")),
+      "tls_version" -> when(size(sslParts) === 2,
+        when(sslVer.contains("."), sslVer).otherwise(concat(sslVer, lit(".0")))),
+      "tls_version_protocol" -> when(size(sslParts) === 2, element_at(sslParts, 1)))
+    // P10+P11 geoip (axway-ingest.json:90–123): a range lookup on
+    // source.ip; a miss or a non-axway row rides through with null geo
+    // attrs (geoip's ignore_missing)
+    val pathed = level(derived, Seq(
+      "url_path" -> col("_pq.path"),
+      "url_query" -> nullif(col("_pq.query"), lit(""))) ++
+      geo.map(t => "_geo" -> geo_lookup(ipToLong(col("source_ip")), t)): _*)
+    val last: Map[String, Column] = Map(
+      "url_ext" -> nullif(regexp_extract(col("url_path"), "\\.([a-z0-9]+)$", 1), lit(""))) ++
+      GeoTable.attrType.fields.map { f =>
+        f.name -> (if (geo.isDefined) col("_geo").getField(f.name) else lit(null).cast(f.dataType))
+      }
+    val inputs = docs.columns.toSeq
+    pathed.select((inputs ++ added.filterNot(inputs.contains))
+      .map(c => last.getOrElse(c, col(c)).as(c)): _*)
   }
 }

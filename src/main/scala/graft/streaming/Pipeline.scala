@@ -191,7 +191,7 @@ object Pipeline {
     try {
       // docs has a second consumer beyond the archive whenever a bulk
       // target or the alert stage is on — persist so the enrich chain
-      // (regex scrub, geoip broadcast join) runs once per batch, not
+      // (regex scrub, grok, geoip lookup) runs once per batch, not
       // once per consumer
       val multi = bulk.isDefined || alerts.isDefined
       val docs0 = enrich(flatten(d.filter(col("err").isNull)))

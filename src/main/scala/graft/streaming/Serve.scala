@@ -59,12 +59,15 @@ object Serve {
     // one-pipeline-to-rule-them-all on each doc): ON by default, opt out
     // with SPARK_GRAFT_PIPELINE=none. SPARK_GRAFT_GEODIM=<dir> loads the
     // nation-derived geoip dim from that testdata dir (a real deployment
-    // points this at its converted GeoLite2 range table).
+    // points this at its converted GeoLite2 range table). The enricher
+    // collects the dim once, here, after the endpoint already answers,
+    // and every micro-batch looks up the same broadcast table, so the
+    // dim must fit the driver, as any broadcast table must.
     val pipelineName = sys.env.getOrElse("SPARK_GRAFT_PIPELINE", "axway-ingest")
-    val geoDim = sys.env.get("SPARK_GRAFT_GEODIM")
-      .map(IngestPipeline.geoDimFromNation(spark, _))
     val enrichStage: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (pipelineName == "none") identity else IngestPipeline.enrich(_, geoDim)
+      if (pipelineName == "none") identity
+      else IngestPipeline.enricher(sys.env.get("SPARK_GRAFT_GEODIM")
+        .map(IngestPipeline.geoDimFromNation(spark, _)))
     // SPARK_GRAFT_SCRUB_PII=1: redact email/IPv4/SSN from messages
     // BEFORE enrichment, indexing, and the SUCCESS archive — raw PII
     // never lands on disk or in the index

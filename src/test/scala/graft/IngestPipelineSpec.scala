@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.net.InetSocketAddress
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -197,5 +202,109 @@ class IngestPipelineSpec extends SparkSpec {
       // null enrichment fields dropped on serialize (P14's null-strip)
       assert(!pl.contains("http_method") && !pl.contains("geo_country"))
     } finally { ep.stop(); bulk.stop(0) }
+  }
+
+  /** A one-column-per-name dim over (ip_start, ip_end, geo_country). */
+  private def dimOf(rows: (Option[Long], Option[Long], String)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("ip_start", "ip_end", "geo_country")
+      .withColumn("as_number", org.apache.spark.sql.functions.lit(1L))
+      .withColumn("organization_name", org.apache.spark.sql.functions.lit("AS-ORG"))
+  }
+
+  test("geo dim: overlapping or inverted ranges fail at load naming the pair; null bounds are skipped") {
+    // an address in two ranges would index its document twice under one
+    // _id; the lookup refuses such a dim instead of picking one
+    val axDoc = docs((7L, "/axway/x", s"""{"text":"${line.replace("\"", "\\\"")}"}"""))
+    val overlap = intercept[IllegalArgumentException](IngestPipeline.enrich(axDoc, Some(dimOf(
+      (Some(3405775000L), Some(3405776000L), "B"),
+      (Some(3405774848L), Some(3405775103L), "A")))).collect())
+    assert(overlap.getMessage.contains("[3405774848, 3405775103] (A) and [3405775000, 3405776000] (B)"),
+      overlap.getMessage)
+    val inverted = intercept[IllegalArgumentException](IngestPipeline.enrich(axDoc, Some(dimOf(
+      (Some(3405775103L), Some(3405774848L), "C")))).collect())
+    assert(inverted.getMessage.contains("[3405775103, 3405774848] (C)"), inverted.getMessage)
+    // a null bound matches no address, so it is neither an overlap nor a hit
+    val rows = IngestPipeline.enrich(axDoc, Some(dimOf(
+      (None, Some(3405775103L), "N"),
+      (Some(3405774848L), Some(3405775103L), "T"),
+      (Some(3405774000L), None, "M")))).collect()
+    assert(rows.map(_.getAs[String]("geo_country")).toSeq == Seq("T"))
+  }
+
+  test("enrich is a few projections with no join, and keeps its output schema") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+    def projects(p: LogicalPlan): Int = p.collect { case x: Project => x }.size
+    val in = docs((1L, "/axway/prod/http-access", "x"))
+    val out = IngestPipeline.enrich(in, Some(testDim))
+    val plan = out.queryExecution.analyzed
+    assert(plan.collect { case j: Join => j }.isEmpty, s"enrich must not join:\n$plan")
+    val added = projects(plan) - projects(in.queryExecution.analyzed)
+    assert(added <= 8, s"enrich added $added projections:\n$plan")
+    // the archive and the bulk renderer read these columns by name and
+    // position; with or without a dim the schema is the same
+    def shape(df: DataFrame): String =
+      df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
+    val expected = "event_id:bigint,logGroup:string,message:string,batch_ms:bigint," +
+      "requestId:string,logStream:string,event_ref:string,event_ms:bigint," +
+      "pipeline:string,message_v:variant,source_address:string,user_name:string," +
+      "http_method:string,http_version:string,status_code:bigint,body_bytes:bigint," +
+      "response_ms:bigint,url_original:string,url_path:string,url_query:string," +
+      "url_ext:string,url_domain:string,event_kind:string,event_category:string," +
+      "event_outcome:string,source_ip:string,source_domain:string,event_created_ms:bigint," +
+      "tls_cipher:string,tls_version:string,tls_version_protocol:string," +
+      "geo_country:string,as_number:bigint,organization_name:string"
+    assert(shape(out) == expected)
+    assert(shape(IngestPipeline.enrich(in)) == expected)
+  }
+
+  test("a live micro-batch with a geo dim runs one Spark job per sink action") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val stub = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    stub.createContext("/", (ex: HttpExchange) => {
+      ex.getRequestBody.readAllBytes()
+      val resp = """{"took":1,"errors":false,"items":[]}""".getBytes(UTF_8)
+      ex.sendResponseHeaders(200, resp.length)
+      ex.getResponseBody.write(resp)
+      ex.close()
+    })
+    stub.start()
+    // jobs keyed by the micro-batch that ran them
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.merge(b, 1, (a: Integer, c: Integer) => a + c))
+    }
+    def b64(s: String): String = java.util.Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
+    def cw(id: String): String = b64(
+      s"""{"logGroup":"/axway/prod/http-access","logStream":"s1","logEvents":[""" +
+        s"""{"id":"$id","timestamp":1000,"message":"${line.replace("\"", "\\\"")}"}]}""")
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, Long, String)]
+    org.apache.spark.sql.graftshim.ListenerBus.flush(spark)
+    spark.sparkContext.addSparkListener(counter)
+    val q = Pipeline.run(in.toDF().toDF("event_id", "batch_ms", "data"),
+      tmp("ing-jobs-out"), tmp("ing-jobs-ckpt"),
+      bulk = Some(HttpBulk.Target(s"http://127.0.0.1:${stub.getAddress.getPort}/_bulk", "graft-docs")),
+      trigger = Trigger.ProcessingTime(0L),
+      enrich = IngestPipeline.enricher(Some(testDim)))
+    try {
+      // batch 0 carries a dead letter: POST, SUCCESS and ERROR; batch 1
+      // is clean: POST and SUCCESS. Building the geo lookup is no job
+      in.addData((1L, 1L, cw("a")), (2L, 1L, b64("garbage")))
+      q.processAllAvailable()
+      in.addData((3L, 2L, cw("b")))
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      stub.stop(0)
+      org.apache.spark.sql.graftshim.ListenerBus.flush(spark)
+      spark.sparkContext.removeSparkListener(counter)
+    }
+    assert(jobs.asScala.toMap.map { case (b, n) => b -> n.intValue } == Map("0" -> 3, "1" -> 2),
+      s"jobs per batch: $jobs")
   }
 }

@@ -370,16 +370,15 @@ class PlanSpec extends SparkSpec {
       s"expected exactly one variant parse site, got ${parses.size}:\n$p")
   }
 
-  test("np_ingest_pipeline: one broadcast hash join, no BNLJ, no required probe shuffle") {
+  test("np_ingest_pipeline: geoip is a broadcast lookup, not a join; nothing shuffles") {
     val p = physical("np_ingest_pipeline")
-    assert(nodes(p).exists(_.isInstanceOf[BroadcastHashJoinExec]),
-      s"the geoip stage must be the bucketed broadcast HASH join:\n$p")
-    assert(!nodes(p).exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]) &&
-      !nodes(p).exists(_.isInstanceOf[SortMergeJoinExec]) &&
-      !nodes(p).exists(_.isInstanceOf[ShuffledHashJoinExec]),
-      s"the enrichment chain grew a non-broadcast join:\n$p")
-    // the whole chain is one projection pass + the broadcast join: the
-    // only permitted shuffle is Par.spread's explicit widening
+    assert(nodes(p).exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.expr.GeoLookup]))),
+      s"the geoip stage must be the broadcast range lookup:\n$p")
+    assert(!nodes(p).exists(n => n.getClass.getSimpleName.contains("Join") ||
+        n.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
+      s"the enrichment chain grew a join or a broadcast exchange:\n$p")
+    // the whole chain is one projection pass: the only permitted
+    // shuffle is Par.spread's explicit widening
     val required = nodes(p).collect {
       case e: ShuffleExchangeExec
           if e.shuffleOrigin == org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS => e
